@@ -169,15 +169,12 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: entity reconstruction + z14 tile assignment + per-tile counts
     over sf0.001 (the reference's planet pipeline in miniature)."""
     sf_dir = "/root/testdata/sf0.001"
-    import os
-
     from osm_hadoop_spark.operators.tile_join import assign_tiles, tile_counts
 
-    # physical strategy selected by env (round-4 verdict #1), defaulting to
-    # the zero-Python codegen pipeline; both impls are oracle-pinned twins
+    # the zero-Python codegen cover+refine; the arrow kernel is its
+    # oracle-pinned twin
     assigned = assign_tiles(
-        _local_ways_geom(spark, sf_dir), zoom=14, tms=False,
-        cover_impl=os.environ.get("SPARK_GRAFT_COVER_IMPL", "jvm"),
+        _local_ways_geom(spark, sf_dir), zoom=14, tms=False, cover_impl="jvm"
     )
     return tile_counts(assigned)
 

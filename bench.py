@@ -144,16 +144,11 @@ def flagship_pipeline(spark, docs_path: str):
 
     docs = spark.read.parquet(docs_path)
     ways_geom = build_ways_geom(docs, tag_keys=["highway"])
-    # Physical strategy is SELECTED, not hard-coded (round-4 verdict #1):
-    # SPARK_GRAFT_COVER_IMPL picks the refine kernel. Default "jvm" =
-    # zero Python worker processes end-to-end (span parse is from_json,
-    # assembly native groupBy, refine the segment-explode codegen
-    # pipeline — reshaped in round 5 from the interpreted exists() HOF,
-    # which closed the round-4 constant-factor gap); "arrow" = the NumPy
-    # separating-axis kernel. Both are value-pinned to the same oracles
-    # (test_tile_join parity + shared DuckDB twin).
-    impl = os.environ.get("SPARK_GRAFT_COVER_IMPL", "jvm")
-    assigned = assign_tiles(ways_geom, zoom=14, tms=False, cover_impl=impl)
+    # Zero Python worker processes end-to-end: span parse is from_json,
+    # assembly a native groupBy, refine the segment-explode codegen
+    # pipeline. The arrow kernel is value-pinned to it (test_tile_join
+    # parity + shared DuckDB twin).
+    assigned = assign_tiles(ways_geom, zoom=14, tms=False, cover_impl="jvm")
     counts = tile_counts(assigned)
     return counts.agg(
         F.count(F.lit(1)).alias("n_tiles"), F.sum("n_ways").alias("n_pairs")

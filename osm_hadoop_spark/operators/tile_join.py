@@ -10,10 +10,12 @@ Reference semantics (three zoom variants, SURVEY.md J3):
   - the z13 path buffers the way first (OperatorBuffer 0.008333 deg, :97,108).
 
 Spark-first shape (the north rule's two-stage partitioned join):
-  stage 1: ONE vectorized mapInPandas = cell cover (NumPy slippy polyfill)
-           + exact refine (segment-box separating-axis / distance kernels)
-           — emits only surviving (cell, way) pairs, so the shuffle carries
-           no false positives;
+  stage 1: cell cover + exact refine (segment-box separating-axis /
+           distance kernels) — emits only surviving (cell, way) pairs, so
+           the shuffle carries no false positives. Two pair-identical
+           kernels: `cover_impl="jvm"` (the flagship's, whole-stage codegen,
+           no Python workers) and `cover_impl="arrow"` (one vectorized
+           mapInPandas, NumPy slippy polyfill);
   stage 2: native hash aggregate on the packed cell key.
 
 Buffered variant: instead of materializing buffer polygons (shapely-free
@@ -21,9 +23,14 @@ env), a tile intersects buffer(line, d) EXACTLY when dist(line, tile_box)
 <= d — segment-to-box distance kernel; same result set as the reference's
 buffer+intersects, without polygon construction.
 
-Skew: dense cells (urban areas) concentrate pairs. `salted=True` pre-combines
-per (cell, salt) then merges — the explicit salt path demanded by the north
-rule; AQE skew-join handles the join-side.
+Skew: dense cells (urban areas) concentrate pairs. The count aggregate
+combines map-side on its own; the bitset OR gets no partial aggregation,
+so `or_composite_bitsets(salted=True)` pre-combines per (tile, salt) then
+merges — the explicit salt path demanded by the north rule. AQE skew-join
+handles the join side.
+
+Degenerate input: geometries with an empty coordinate array are dropped
+before the cover, so both cover kernels return the same pairs.
 """
 
 from __future__ import annotations
@@ -127,7 +134,8 @@ def assign_tiles(
     do_refine = bool(refine)
     max_cells = max_cells_per_geom
 
-    src = ways.select(F.col(id_col).alias("_id"), "xs", "ys")
+    # an empty coordinate array has no envelope: drop it before either kernel
+    src = ways.select(F.col(id_col).alias("_id"), "xs", "ys").filter(F.size("xs") > 0)
 
     if cover_impl not in ("arrow", "jvm"):
         raise ValueError(f"unknown cover_impl {cover_impl!r} (use 'arrow' or 'jvm')")
@@ -307,21 +315,13 @@ def assign_tiles(
     return out.withColumnRenamed("_id", id_col)
 
 
-def tile_counts(assigned: DataFrame, salted: bool = False, salt_buckets: int = 16) -> DataFrame:
+def tile_counts(assigned: DataFrame) -> DataFrame:
     """A4: intersecting-way count per tile (RoadlessRoadCount reduce :190-193).
 
     COUNT is algebraic — Spark's partial aggregation already combines
-    map-side, so salting is never NEEDED for counts; `salted=True` exists to
-    demonstrate/exercise the explicit two-level path on pathological keys.
+    map-side, so a hot tile never funnels its raw pairs through one task.
     """
-    if not salted:
-        return assigned.groupBy("tile_id").agg(F.count(F.lit(1)).alias("n_ways"))
-    partial = (
-        assigned.withColumn("_salt", F.pmod(F.hash("way_id"), F.lit(salt_buckets)))
-        .groupBy("tile_id", "_salt")
-        .agg(F.count(F.lit(1)).alias("pc"))
-    )
-    return partial.groupBy("tile_id").agg(F.sum("pc").alias("n_ways"))
+    return assigned.groupBy("tile_id").agg(F.count(F.lit(1)).alias("n_ways"))
 
 
 def rasterize_tile_bitsets(

@@ -129,55 +129,33 @@ def with_wkt(
 
 
 def build_ways_geom(documents: DataFrame, tag_keys: list[str] | None = None,
-                    validate: bool = False, cache: bool = True,
-                    single_scan: bool = True) -> DataFrame:
+                    validate: bool = False) -> DataFrame:
     """documents -> assembled ways: the Phase-1 spine (SURVEY.md section 7).
 
     scan -> span parse (JVM from_json) -> F1 tag filter -> J1 join -> J2
-    assembly. `validate=True` runs the reference's uniqueness assertions.
+    assembly. `validate=True` runs the reference's uniqueness assertions
+    on the input.
 
-    Scan economy: `single_scan=True` (default) parses BOTH entity kinds in
-    ONE physical pass over documents (spans.parse_entities — the
-    reference's one-mapper dispatch, NodeJoiner.scala:110-141) into a slim
-    persisted union frame; ways/way_nodes/nodes all derive from it. One
-    scan of 100 TB instead of two. The F1 tag filter applies before the
-    persist (and therefore before waynode emission, the reference's
-    filter-then-emit order, NodeJoiner.scala:110-122). `single_scan=False`
-    keeps the previous two-scan form (parsed ways persisted, nodes
-    re-scanned) for A/B.
+    Both entity kinds are parsed in ONE physical pass over documents
+    (spans.parse_entities — the reference's one-mapper dispatch,
+    NodeJoiner.scala:110-141) into a slim union frame, persisted
+    MEMORY_AND_DISK; ways, way_nodes and nodes all derive from it. The F1
+    tag filter (spans.has_any_tag) applies before the persist, and
+    therefore before waynode emission — the reference's filter-then-emit
+    order (NodeJoiner.scala:110-122).
     """
     from pyspark import StorageLevel
 
     from osm_hadoop_spark.sources import spans as S
 
-    if single_scan:
-        ent = S.parse_entities(documents)
-        if tag_keys:
-            keys = F.array(*[F.lit(k) for k in tag_keys])
-            ent = ent.filter(
-                F.col("is_node")
-                | F.exists(F.map_keys("tags"), lambda k: F.array_contains(keys, k))
-            )
-        if cache:
-            ent = ent.persist(StorageLevel.MEMORY_AND_DISK)
-        wf = ent.filter(~F.col("is_node")).select("way_id", "tags", "nds")
-        nodes = ent.filter(F.col("is_node")).select("node_id", "lon", "lat")
-        ways = wf.select("way_id", "tags")
-        way_nodes = S.explode_way_nodes(wf)
-        if validate:
-            check_unique(nodes, "node_id", "nodes")
-            check_unique(ways, "way_id", "ways")
-        referenced = join_node_coords(nodes, way_nodes)
-        return assemble_ways(ways, referenced)
-
-    wf = S.parse_ways_with_nds(documents)
+    ent = S.parse_entities(documents)
     if tag_keys:
-        wf = S.filter_ways_by_tags(wf, tag_keys)
-    if cache:
-        wf = wf.persist(StorageLevel.MEMORY_AND_DISK)
+        ent = ent.filter(F.col("is_node") | S.has_any_tag(tag_keys))
+    ent = ent.persist(StorageLevel.MEMORY_AND_DISK)
+    wf = ent.filter(~F.col("is_node")).select("way_id", "tags", "nds")
+    nodes = ent.filter(F.col("is_node")).select("node_id", "lon", "lat")
     ways = wf.select("way_id", "tags")
     way_nodes = S.explode_way_nodes(wf)
-    nodes = S.parse_nodes(documents)
     if validate:
         check_unique(nodes, "node_id", "nodes")
         check_unique(ways, "way_id", "ways")

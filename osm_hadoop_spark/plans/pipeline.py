@@ -107,14 +107,7 @@ def planet_pipeline(spark: SparkSession, catalog: SnapshotCatalog,
 
     @p.stage("way_nodes")
     def _way_nodes(pl):
-        ways = pl.table("ways")
-        if "nds" in ways.columns:
-            return S.explode_way_nodes(ways)
-        # resume compatibility: a 'ways' snapshot written before nds was
-        # carried (round 1 schema) lacks the column — fall back to the
-        # documents scan + semi-join, instead of failing mid-pipeline
-        refs = S.parse_way_nodes(documents)
-        return refs.join(ways.select("way_id"), "way_id", "left_semi")
+        return S.explode_way_nodes(pl.table("ways"))
 
     @p.stage("referenced")
     def _referenced(pl):

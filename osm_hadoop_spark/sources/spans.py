@@ -69,16 +69,6 @@ def parse_nodes(documents: DataFrame) -> DataFrame:
     ).filter(F.col("node_id").isNotNull())
 
 
-def parse_ways(documents: DataFrame) -> DataFrame:
-    """osm.way spans -> ways(way_id, tags) (projection F4)."""
-    s = exploded_spans(documents).filter(F.col("kind") == "osm.way")
-    p = s.select(F.from_json("text", WAY_PAYLOAD_SCHEMA).alias("w"))
-    return p.select(
-        F.col("w.id").alias("way_id"),
-        F.col("w.tags").alias("tags"),
-    ).filter(F.col("way_id").isNotNull())
-
-
 def parse_ways_with_nds(documents: DataFrame) -> DataFrame:
     """osm.way spans -> (way_id, tags, nds): ONE parse serving both the F4
     way projection and the waynode-ref emission. At planet scale the
@@ -100,20 +90,6 @@ def explode_way_nodes(ways_with_nds: DataFrame) -> DataFrame:
     position in the nd list (NodeJoiner.scala:114-122)."""
     return ways_with_nds.select(
         "way_id", F.posexplode("nds").alias("ordinal", "node_id")
-    ).select("node_id", "way_id", "ordinal")
-
-
-def parse_way_nodes(documents: DataFrame) -> DataFrame:
-    """osm.way spans -> way_nodes(node_id, way_id, ordinal).
-
-    Mirrors the waynode emission with zipWithIndex ordinals
-    (NodeJoiner.scala:114-122); ordinal = position in the way's nd list.
-    """
-    s = exploded_spans(documents).filter(F.col("kind") == "osm.way")
-    p = s.select(F.from_json("text", WAY_PAYLOAD_SCHEMA).alias("w"))
-    return p.filter(F.col("w.id").isNotNull()).select(
-        F.col("w.id").alias("way_id"),
-        F.posexplode("w.nds").alias("ordinal", "node_id"),
     ).select("node_id", "way_id", "ordinal")
 
 
@@ -182,13 +158,16 @@ def explode_relation_members(relations: DataFrame) -> DataFrame:
     )
 
 
-def filter_ways_by_tags(ways: DataFrame, tag_keys: list[str]) -> DataFrame:
-    """F1 tag-existence filter (filter/EntityFilters.scala:19-23): keep ways
-    having at least one of `tag_keys` in the tag map."""
+def has_any_tag(tag_keys: list[str]):
+    """F1 tag-existence predicate (filter/EntityFilters.scala:19-23): true
+    for rows whose `tags` map has at least one of `tag_keys`."""
     keys = F.array(*[F.lit(k) for k in tag_keys])
-    return ways.filter(
-        F.exists(F.map_keys("tags"), lambda k: F.array_contains(keys, k))
-    )
+    return F.exists(F.map_keys("tags"), lambda k: F.array_contains(keys, k))
+
+
+def filter_ways_by_tags(ways: DataFrame, tag_keys: list[str]) -> DataFrame:
+    """F1 tag filter: keep ways having at least one of `tag_keys`."""
+    return ways.filter(has_any_tag(tag_keys))
 
 
 def span_fingerprint60(documents: DataFrame) -> DataFrame:

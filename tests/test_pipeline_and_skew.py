@@ -106,24 +106,48 @@ def test_skew_fixture_shape(spark, skew_docs):
     """Viral node 1 must appear in ~30% of ways (FIXTURES.md section 7)."""
     from osm_hadoop_spark.sources import spans as S
 
-    wn = S.parse_way_nodes(skew_docs)
+    wn = S.explode_way_nodes(S.parse_ways_with_nds(skew_docs))
     n_ways = wn.select("way_id").distinct().count()
     viral_ways = wn.filter(F.col("node_id") == 1).select("way_id").distinct().count()
     assert 0.2 <= viral_ways / n_ways <= 0.4
 
 
 def test_skew_join_correct_and_salting_invariant(spark, skew_docs):
-    """J1+J3 outputs identical with salting on and off over the skewed table."""
+    """J1+J3 over the skewed table: the dense cell survives into the counts."""
     ways_geom = build_ways_geom(skew_docs, tag_keys=["highway"]).cache()
     assert ways_geom.count() > 0
     assigned = assign_tiles(ways_geom, zoom=13, tms=False).cache()
-    plain = {(r["tile_id"], r["n_ways"]) for r in tile_counts(assigned, salted=False).collect()}
-    salted = {(r["tile_id"], r["n_ways"]) for r in tile_counts(assigned, salted=True, salt_buckets=7).collect()}
-    assert plain == salted
+    plain = {(r["tile_id"], r["n_ways"]) for r in tile_counts(assigned).collect()}
     # dense cell exists: max tile count should swallow a large share of ways
     # (~50% of cells relocate to a ~0.05-deg area spanning 1-4 z13 tiles)
     top = max(n for _, n in plain)
     assert top > ways_geom.count() * 0.1
+
+
+@pytest.mark.parametrize("docs_fixture", ["synth_docs", "skew_docs"])
+def test_planet_pipeline_equals_in_memory_chain(spark, request, docs_fixture, tmp_path):
+    """The two production chains agree: planet_pipeline's ways_geom and
+    tile_counts snapshots equal build_ways_geom -> assign_tiles(jvm) ->
+    tile_counts on the same documents."""
+    docs = request.getfixturevalue(docs_fixture)
+    cat = SnapshotCatalog(spark, str(tmp_path / "warehouse"), use_iceberg=False)
+    planet_pipeline(spark, cat, docs, tag_keys=["highway"], zoom=14).run(resume=False)
+    ways_geom = build_ways_geom(docs, tag_keys=["highway"])
+    counts = tile_counts(assign_tiles(ways_geom, zoom=14, tms=False, cover_impl="jvm"))
+
+    def geoms(df):
+        return sorted(
+            (r["way_id"], tuple(sorted(r["tags"].items())), tuple(r["xs"]), tuple(r["ys"]), r["n_pts"])
+            for r in df.collect()
+        )
+
+    def tiles(df):
+        return sorted((r["tile_id"], r["n_ways"]) for r in df.collect())
+
+    want_geoms = geoms(ways_geom)
+    assert want_geoms and geoms(cat.read("ways_geom")) == want_geoms
+    want_tiles = tiles(counts)
+    assert want_tiles and tiles(cat.read("tile_counts")) == want_tiles
 
 
 def test_knn_adversarial_scale(spark):

@@ -93,11 +93,22 @@ def test_refine_prunes_candidates(spark, ways_arrays):
     assert refined <= cover
 
 
-def test_tile_counts_salted_equals_plain(spark, ways_arrays):
-    assigned = assign_tiles(ways_arrays, 16, tms=True).cache()
-    plain = {(r["tile_id"], r["n_ways"]) for r in tile_counts(assigned).collect()}
-    salted = {(r["tile_id"], r["n_ways"]) for r in tile_counts(assigned, salted=True).collect()}
-    assert plain == salted
+@pytest.mark.parametrize("buffer_deg", [0.0, BUFFER_DEG_Z13])
+@pytest.mark.parametrize("cover_impl", ["jvm", "arrow"])
+def test_assign_tiles_drops_empty_coordinate_arrays(spark, cover_impl, buffer_deg):
+    """A way with empty xs/ys has no envelope: both kernels drop it and keep
+    the valid way's pairs, instead of raising."""
+    ways = spark.createDataFrame(
+        [(1, [10.0, 10.01], [50.0, 50.01]), (2, [], [])],
+        "way_id long, xs array<double>, ys array<double>",
+    )
+
+    def pairs(df):
+        out = assign_tiles(df, 14, tms=False, buffer_deg=buffer_deg, cover_impl=cover_impl)
+        return {(r["way_id"], r["tile_id"]) for r in out.collect()}
+
+    want = pairs(ways.filter("way_id = 1"))
+    assert want and pairs(ways) == want
 
 
 def test_bitset_burn_and_or_composite(spark):

@@ -21,8 +21,8 @@ from osm_hadoop_spark.sources.fixtures import DB_SNAPSHOT_EXPECTED_WKT
 
 def test_span_parse_counts(db_snapshot_docs):
     nodes = S.parse_nodes(db_snapshot_docs)
-    ways = S.parse_ways(db_snapshot_docs)
-    way_nodes = S.parse_way_nodes(db_snapshot_docs)
+    ways = S.parse_ways_with_nds(db_snapshot_docs)
+    way_nodes = S.explode_way_nodes(ways)
     assert nodes.count() == 6
     assert ways.count() == 4
     assert way_nodes.count() == 3 + 3 + 3 + 1
@@ -35,14 +35,15 @@ def test_node_projection_values(db_snapshot_docs):
 
 
 def test_tag_filter(db_snapshot_docs):
-    ways = S.parse_ways(db_snapshot_docs)
+    ways = S.parse_ways_with_nds(db_snapshot_docs)
     assert S.filter_ways_by_tags(ways, ["highway"]).count() == 4
     assert S.filter_ways_by_tags(ways, ["building", "waterway"]).count() == 0
 
 
 def test_j1_join(db_snapshot_docs):
     ref = join_node_coords(
-        S.parse_nodes(db_snapshot_docs), S.parse_way_nodes(db_snapshot_docs)
+        S.parse_nodes(db_snapshot_docs),
+        S.explode_way_nodes(S.parse_ways_with_nds(db_snapshot_docs)),
     )
     rows = ref.collect()
     assert len(rows) == 10
@@ -74,13 +75,13 @@ def test_check_unique_raises(spark):
 def test_row_count_conservation_synth(synth_docs):
     """J1 output rows == way_nodes rows when every node_id resolves (FK holds)."""
     nodes = S.parse_nodes(synth_docs)
-    way_nodes = S.parse_way_nodes(synth_docs)
+    way_nodes = S.explode_way_nodes(S.parse_ways_with_nds(synth_docs))
     assert join_node_coords(nodes, way_nodes).count() == way_nodes.count()
 
 
 def test_assembly_counts_synth(synth_docs):
     ways_geom = build_ways_geom(synth_docs)
-    ways = S.parse_ways(synth_docs)
+    ways = S.parse_ways_with_nds(synth_docs)
     # every way has >= 2 nds in the generator, so none is dropped by F5
     assert ways_geom.count() == ways.count()
     bad = ways_geom.filter(F.size("xs") != F.col("n_pts")).count()
@@ -260,13 +261,3 @@ def test_parse_entities_drops_malformed_and_foreign_kinds(spark):
     assert len(rows) == 2
     got = {(r["is_node"], r["node_id"], r["way_id"]) for r in rows}
     assert got == {(True, 7, None), (False, None, 9)}
-
-
-def test_build_ways_geom_single_scan_equals_dual(db_snapshot_docs):
-    a = {(r["way_id"], tuple(r["xs"]), tuple(r["ys"]))
-         for r in build_ways_geom(db_snapshot_docs, tag_keys=["highway"],
-                                  single_scan=True).collect()}
-    b = {(r["way_id"], tuple(r["xs"]), tuple(r["ys"]))
-         for r in build_ways_geom(db_snapshot_docs, tag_keys=["highway"],
-                                  single_scan=False).collect()}
-    assert a == b and len(a) > 0
