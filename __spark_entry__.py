@@ -978,7 +978,7 @@ def _q_s2_region_contain(spark, sf_dir):
         (F.lit(2) + F.col("n_nationkey") % 3).cast("int").alias("level"),
     )
     regions = regions_from_points(nat, "rid", "lon", "lat", "level")
-    joined = s2_containment_join(nodes, regions, strategy="levels")
+    joined = s2_containment_join(nodes, regions)
     return joined.groupBy("region_id", "region_cell").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_nodes")
     )
@@ -3076,7 +3076,7 @@ FROM pts p LEFT JOIN comp cm ON p.id = cm.id LEFT JOIN bord b ON p.id = b.id
 # same clustered point derivation as dbscan_hotspots; integer triangular
 # kernel -> every density is an exact integer, so the DuckDB twin (direct
 # (2r+1)^2 product — a DIFFERENT evaluation order than the separable
-# two-pass the operator defaults to) matches bit-for-bit.
+# two-pass the operator runs) matches bit-for-bit.
 _KDE_CELL, _KDE_R = 25, 3
 
 
@@ -8585,8 +8585,8 @@ FROM deg d LEFT JOIN tn USING (u) WHERE d.deg >= 2
 # --- focal raster statistics (operators/focal.py) ---------------------------
 # R3: map algebra — 3x3 focal sum/count/max/mean at every data cell of
 # the sparse count raster (nodata excluded), mean as fixed-point integer
-# DIV. Engine = offset-explode + hash agg + semi-join (auto strategy:
-# direct at k=1, separable two-pass for wider kernels — measured in
+# DIV. Engine = offset-explode + hash agg + semi-join (picked by kernel
+# width: direct at k=1, separable two-pass for wider kernels — measured in
 # operators/focal.py); oracle = a 2-D neighborhood self-JOIN — different
 # evaluation mechanism, bit-identical integers.
 def _q_focal_stats(spark, sf_dir):

@@ -156,13 +156,24 @@ def flagship_pipeline(spark, docs_path: str):
 
 
 def run_flagship(spark, n_docs: int, iters: int = 1) -> dict:
+    """Time `iters` runs of the flagship pipeline. Every iteration starts
+    with nothing persisted, so each one pays the scan and the parse that
+    `build_ways_geom` persists (a warm iteration would otherwise read the
+    previous iteration's cached parse)."""
     docs_path = ensure_docs_parquet(spark, n_docs)
     times = []
-    row = None
+    results = []
     for _ in range(max(1, iters)):
+        spark.catalog.clearCache()
+        persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+        if persisted:
+            raise RuntimeError(f"bench: {persisted} persisted RDDs at the start of an iteration")
         t0 = time.time()
         row = flagship_pipeline(spark, docs_path).collect()[0]
         times.append(time.time() - t0)
+        results.append((row["n_tiles"], int(row["n_pairs"])))
+    if len(set(results)) > 1:
+        raise RuntimeError(f"bench: iterations disagree: {results}")
     best = min(times)
     return {
         "elapsed_sec": times[0],
@@ -170,8 +181,8 @@ def run_flagship(spark, n_docs: int, iters: int = 1) -> dict:
         "iters": [round(t, 3) for t in times],
         "docs_per_sec": n_docs / best,
         "n_docs": n_docs,
-        "n_tiles": row["n_tiles"],
-        "n_pairs": int(row["n_pairs"]),
+        "n_tiles": results[0][0],
+        "n_pairs": results[0][1],
     }
 
 
@@ -227,74 +238,6 @@ def main() -> None:
         "n_docs": flag["n_docs"],
         "n_tiles": flag["n_tiles"],
         "n_pairs": flag["n_pairs"],
-        "cpus": int(CPUS),
-    }
-    spark.stop()
-    print(json.dumps(out))
-
-
-def _resolve_query(spec: str):
-    """Resolve an --ab spec to a (spark, sf_dir) -> DataFrame callable.
-
-    Accepts a `queries()` name from __spark_entry__.py, or
-    `module.path:callable` for ad-hoc variants (e.g. a branch of an
-    operator kept around for comparison)."""
-    if ":" in spec:
-        import importlib
-
-        mod_name, fn_name = spec.split(":", 1)
-        return getattr(importlib.import_module(mod_name), fn_name)
-    import importlib.util
-
-    s = importlib.util.spec_from_file_location(
-        "entry_mod_ab", os.path.join(REPO, "__spark_entry__.py")
-    )
-    m = importlib.util.module_from_spec(s)
-    s.loader.exec_module(m)
-    qs = m.queries()
-    if spec not in qs:
-        raise SystemExit(f"--ab: unknown query {spec!r}; known: {sorted(qs)}")
-    return qs[spec]
-
-
-def run_ab(spec_a: str, spec_b: str, reps: int) -> None:
-    """Interleaved same-JVM A/B: the host's multi-minute 5x performance
-    windows make cross-run comparisons meaningless (BENCH/NOTES.md), so a
-    regression claim must come from A,B,A,B,... in ONE JVM where both
-    variants sample the same windows. One unmeasured warmup round runs
-    first (JIT/codegen). Reports per-rep times, medians, peaks, and the
-    median/peak B-vs-A ratios."""
-    from osm_hadoop_spark.session import get_spark
-
-    fa, fb = _resolve_query(spec_a), _resolve_query(spec_b)
-    spark = get_spark("bench-ab", master=f"local[{CPUS}]",
-                      shuffle_partitions=int(CPUS))
-    for fn in (fa, fb):  # warmup, unmeasured
-        fn(spark, SF_DIR).count()
-    times: dict[str, list[float]] = {spec_a: [], spec_b: []}
-    for rep in range(reps):
-        for spec, fn in ((spec_a, fa), (spec_b, fb)):
-            t0 = time.time()
-            n = fn(spark, SF_DIR).count()
-            dt = time.time() - t0
-            times[spec].append(dt)
-            log(f"ab: rep {rep + 1}/{reps} {spec}: {dt:.3f}s ({n} rows)")
-    med_a, med_b = _median(times[spec_a]), _median(times[spec_b])
-    peak_a, peak_b = min(times[spec_a]), min(times[spec_b])
-    out = {
-        "metric": "ab_interleaved",
-        "a": spec_a,
-        "b": spec_b,
-        "reps": reps,
-        "times_a": [round(t, 3) for t in times[spec_a]],
-        "times_b": [round(t, 3) for t in times[spec_b]],
-        "median_a": round(med_a, 3),
-        "median_b": round(med_b, 3),
-        "peak_a": round(peak_a, 3),
-        "peak_b": round(peak_b, 3),
-        "b_over_a_median": round(med_b / med_a, 3),
-        "b_over_a_peak": round(peak_b / peak_a, 3),
-        "sf": SF_DIR.rstrip("/").split("sf")[-1],
         "cpus": int(CPUS),
     }
     spark.stop()
@@ -528,11 +471,5 @@ def render_from_json(path: str) -> None:
 if __name__ == "__main__":
     if "--render" in sys.argv:
         render_from_json(sys.argv[sys.argv.index("--render") + 1])
-    elif "--ab" in sys.argv:
-        use_tmpfs_shuffle_dir()
-        i = sys.argv.index("--ab")
-        reps = (int(sys.argv[sys.argv.index("--reps") + 1])
-                if "--reps" in sys.argv else 5)
-        run_ab(sys.argv[i + 1], sys.argv[i + 2], reps)
     else:
         main()

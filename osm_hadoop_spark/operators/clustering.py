@@ -37,7 +37,7 @@ so a DuckDB twin reproduces every label bit-for-bit.
     only — border and noise points never enter the iteration.
   - Known hot spot: a cell holding c points emits c^2 in-cell candidate
     pairs — quadratic in the densest cell (a metro hotspot at planet
-    scale). `dense_cells="star"` (default) short-circuits it EXACTLY:
+    scale). The dense-cell star short-circuits it EXACTLY:
     with cell side floor(eps/sqrt(2)), every in-cell pair is mutually
     within eps, so members of a cell holding >= min_pts points are core
     BY CONSTRUCTION and the c^2 in-cell pairs are never generated —
@@ -47,9 +47,8 @@ so a DuckDB twin reproduces every label bit-for-bit.
     components — the in-cell edge set is total — so the CC iteration sees
     cells + sparse cores, not individual points). Cross-cell pairs keep
     the exact distance refine (5x5 probe at the smaller cell side).
-    `dense_cells="pairs"` keeps the naive 3x3
-    eps-grid everywhere (the A/B baseline; label equivalence pinned in
-    tests/test_clustering.py).
+    Labels are pinned against a textbook brute force in
+    tests/test_clustering.py.
 
 Reference analogs cited for parity bookkeeping: candidate grid =
 GetCellsForWay tiling (functions/tiles.py, J3/J5), iterative labeling =
@@ -83,7 +82,6 @@ def dbscan(
     id_col: str = "id",
     x: str = "x",
     y: str = "y",
-    dense_cells: str = "star",
 ) -> DataFrame:
     """Exact DBSCAN over integer 2-D points.
 
@@ -91,8 +89,6 @@ def dbscan(
     ('core','border','noise'); cluster = min point id of the component
     (NULL for noise). Deterministic — see module doc for the border rule.
     """
-    if dense_cells not in ("star", "pairs"):
-        raise ValueError(f"dense_cells must be 'star' or 'pairs': {dense_cells}")
     if eps <= 0 or min_pts < 1:
         raise ValueError("eps must be > 0 and min_pts >= 1")
 
@@ -102,23 +98,16 @@ def dbscan(
         F.col(y).cast("bigint").alias("y"),
     )
     eps2 = eps * eps
-    star = dense_cells == "star"
-    # star mode: side <= eps/sqrt(2) makes in-cell pairs mutually <= eps
-    side = max(1, int(eps / math.sqrt(2.0))) if star else eps
-    reach = -(-eps // side)  # ceil(eps/side); 1 in pairs mode
+    # side <= eps/sqrt(2) makes in-cell pairs mutually <= eps
+    side = max(1, int(eps / math.sqrt(2.0)))
+    reach = -(-eps // side)  # ceil(eps/side)
 
     keyed = _with_cell(pts, side)
-    if star:
-        cell_stats = keyed.groupBy("cell").agg(
-            F.count(F.lit(1)).alias("c_cnt"), F.min("id").alias("c_root")
-        )
-        keyed = keyed.join(cell_stats, "cell")
-        is_dense = F.col("c_cnt") >= min_pts
-    else:
-        keyed = keyed.withColumn("c_cnt", F.lit(0)).withColumn(
-            "c_root", F.lit(None).cast("bigint")
-        )
-        is_dense = F.lit(False)
+    cell_stats = keyed.groupBy("cell").agg(
+        F.count(F.lit(1)).alias("c_cnt"), F.min("id").alias("c_root")
+    )
+    keyed = keyed.join(cell_stats, "cell")
+    is_dense = F.col("c_cnt") >= min_pts
     dense_pts = keyed.filter(is_dense)
     sparse_ids = keyed.filter(~is_dense).select("id")
 

@@ -7,21 +7,21 @@ filters): for every data cell, the sum / count / max / mean of the
 values in its (2k+1)x(2k+1) window, with absent cells treated as nodata
 (excluded) — the sparse-raster convention.
 
-Strategies (identical output, the kde_grid A/B pattern):
-  - "separable": a 1-D x-pass (explode 2k+1 offsets, hash agg of
+Two evaluations, picked by the kernel width (identical output, both
+pinned against a brute force in tests/test_focal.py):
+  - k <= 1, direct: one (2k+1)^2 offset explode + single hash agg.
+  - k >= 2, separable: a 1-D x-pass (explode 2k+1 offsets, hash agg of
     sum/count/max per shifted key) then a 1-D y-pass — legal because
     box-sum, box-count and box-max all factor through row partials.
     Fan-out is 2*(2k+1) per occupied cell vs (2k+1)^2 for direct.
-  - "direct": one (2k+1)^2 offset explode + single hash agg.
-  - "auto" (default): direct for k <= 1, separable for k >= 2.
 
-Measured (bench.py --ab, sf0.1, ~4k occupied cells, local[32]): at k=1
-direct wins (separable/direct median 1.24 — the second shuffle costs
-more than the 9-vs-6 fan-out saves); at k=3 they tie (median ratio
-1.03, peak 0.98) because shuffle setup dominates at this occupancy.
-The separable row-count advantage (2*(2k+1) vs (2k+1)^2 intermediate
-rows) is what survives a 100x-occupancy scale-up, so auto switches to
-it as soon as the kernel is wide enough to matter.
+Measured (interleaved same-JVM A/B, sf0.1, ~4k occupied cells,
+local[32]): at k=1 direct wins (separable/direct median 1.24 — the
+second shuffle costs more than the 9-vs-6 fan-out saves); at k=3 they
+tie (median ratio 1.03, peak 0.98) because shuffle setup dominates at
+this occupancy. The separable row-count advantage (2*(2k+1) vs (2k+1)^2
+intermediate rows) is what survives a 100x-occupancy scale-up, so the
+switch happens as soon as the kernel is wide enough to matter.
 
 Both end with a semi-join back onto the occupied-cell relation: focal
 stats are reported AT data cells only (the dilated halo is dropped).
@@ -43,7 +43,6 @@ from pyspark.sql import functions as F
 def focal_stats(
     cells: DataFrame,
     k: int = 1,
-    strategy: str = "auto",
     mean_bits: int = 10,
 ) -> DataFrame:
     """Focal sum/count/max/mean over the (2k+1)^2 window of each data cell.
@@ -52,16 +51,12 @@ def focal_stats(
     Returns (cx, cy, fsum, fn, fmax, fmean_q) where
     fmean_q = floor(fsum * 2^mean_bits / fn).
     """
-    if strategy not in ("auto", "separable", "direct"):
-        raise ValueError(f"strategy must be 'auto', 'separable' or 'direct': {strategy}")
     if k < 0:
         raise ValueError("k must be >= 0")
-    if strategy == "auto":
-        strategy = "direct" if k <= 1 else "separable"
     scale = 1 << mean_bits
 
     off = F.sequence(F.lit(-k), F.lit(k))
-    if strategy == "separable":
+    if k >= 2:  # separable
         xs = (
             cells.withColumn("_dx", F.explode(off))
             .groupBy((F.col("cx") + F.col("_dx")).alias("cx"), F.col("cy"))
@@ -80,7 +75,7 @@ def focal_stats(
                 F.max("_m").alias("fmax"),
             )
         )
-    else:
+    else:  # direct
         halo = (
             cells.withColumn("_dx", F.explode(off))
             .withColumn("_dy", F.explode(off))

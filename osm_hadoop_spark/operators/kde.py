@@ -15,16 +15,13 @@ with the separable integer triangular kernel
 weights are integers, so a DuckDB twin reproduces every density exactly;
 normalizing to a float surface is a presentation-layer division.
 
-Strategies (identical output, pinned in tests/test_kde.py):
-  - "separable" (default): per-cell counts (hash agg), then a 1-D
-    x-convolution (explode 2r+1 x-offsets, hash agg), then a 1-D
-    y-convolution — legal because w(dx,dy) = wx(dx)*wy(dy). Row
-    amplification is 2*(2r+1) per OCCUPIED CELL (not per point), vs
-    (2r+1)^2 for the direct product — at planet scale with r=8 that is
-    34x vs 289x, and the pre-aggregation means the fan-out operates on
-    the (much smaller) occupied-cell relation.
-  - "direct": one (2r+1)^2 offset explode from the counts relation —
-    one fewer shuffle, cheaper for tiny r; kept as the A/B baseline.
+Separable evaluation (pinned against a brute force in tests/test_kde.py):
+per-cell counts (hash agg), then a 1-D x-convolution (explode 2r+1
+x-offsets, hash agg), then a 1-D y-convolution — legal because
+w(dx,dy) = wx(dx)*wy(dy). Row amplification is 2*(2r+1) per OCCUPIED
+CELL (not per point), vs (2r+1)^2 for a direct 2-D offset explode — at
+planet scale with r=8 that is 34x vs 289x, and the pre-aggregation means
+the fan-out operates on the (much smaller) occupied-cell relation.
 
 100 TB posture: every step is explode-project-aggregate on a computable
 int64 cell key — partial aggregation (map-side combine) applies to all
@@ -46,7 +43,6 @@ def kde_grid(
     radius: int,
     x: str = "x",
     y: str = "y",
-    strategy: str = "separable",
 ) -> DataFrame:
     """Discrete triangular-kernel density per grid cell.
 
@@ -54,8 +50,6 @@ def kde_grid(
     Coordinates are floor-divided by `cell_size`; `radius` is the kernel
     half-width in cells (weights are exact integers).
     """
-    if strategy not in ("separable", "direct"):
-        raise ValueError(f"strategy must be 'separable' or 'direct': {strategy}")
     if cell_size <= 0 or radius < 0:
         raise ValueError("cell_size must be > 0 and radius >= 0")
 
@@ -67,28 +61,13 @@ def kde_grid(
     off = F.sequence(F.lit(-radius), F.lit(radius))
     w = lambda d: F.lit(radius + 1) - F.abs(d)  # noqa: E731
 
-    if strategy == "separable":
-        xs = (
-            counts.withColumn("_dx", F.explode(off))
-            .groupBy(
-                (F.col("cx") + F.col("_dx")).alias("cx"), F.col("cy")
-            )
-            .agg(F.sum(F.col("n") * w(F.col("_dx"))).alias("nx"))
-        )
-        return (
-            xs.withColumn("_dy", F.explode(off))
-            .groupBy(F.col("cx"), (F.col("cy") + F.col("_dy")).alias("cy"))
-            .agg(F.sum(F.col("nx") * w(F.col("_dy"))).alias("density"))
-        )
-
-    return (
+    xs = (
         counts.withColumn("_dx", F.explode(off))
-        .withColumn("_dy", F.explode(off))
-        .groupBy(
-            (F.col("cx") + F.col("_dx")).alias("cx"),
-            (F.col("cy") + F.col("_dy")).alias("cy"),
-        )
-        .agg(
-            F.sum(F.col("n") * w(F.col("_dx")) * w(F.col("_dy"))).alias("density")
-        )
+        .groupBy((F.col("cx") + F.col("_dx")).alias("cx"), F.col("cy"))
+        .agg(F.sum(F.col("n") * w(F.col("_dx"))).alias("nx"))
+    )
+    return (
+        xs.withColumn("_dy", F.explode(off))
+        .groupBy(F.col("cx"), (F.col("cy") + F.col("_dy")).alias("cy"))
+        .agg(F.sum(F.col("nx") * w(F.col("_dy"))).alias("density"))
     )

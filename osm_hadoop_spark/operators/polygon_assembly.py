@@ -14,16 +14,14 @@ express the semantics (endpoint chaining is inherently sequential *within*
 a relation, and relations are small: OSM caps member lists, so groups are
 O(tens)). No driver collect, no cross-relation state.
 
-Two physical strategies, identical results (A/B'd at sf0.1, local[8]):
-  - 'map' (default): `repartition(rel_id)` + `mapInPandas` that buffers the
-    partition, argsorts by rel_id, and slices groups from the raw object
-    arrays. Spark's per-group pandas-DataFrame construction in
-    applyInPandas measured ~1 ms x 15k tiny groups (13.5 s of an 18.6 s
-    stage); this path pays it once per partition instead. Buffering is
-    bounded by the shuffle partition size (slim rows — tune
-    spark.sql.shuffle.partitions at scale exactly as for a sort).
-  - 'group': classic `groupBy(rel_id).applyInPandas` — kept for A/B and
-    for callers whose partitions would be too large to buffer.
+Physical shape: `repartition(rel_id)` + `mapInPandas` that buffers the
+partition, argsorts by rel_id, and slices groups from the raw object
+arrays. Spark's per-group pandas-DataFrame construction in a
+`groupBy(rel_id).applyInPandas` measured ~1 ms x 15k tiny groups (13.5 s
+of an 18.6 s stage at sf0.1, local[8]); this path pays it once per
+partition instead. Buffering is bounded by the shuffle partition size
+(slim rows — tune spark.sql.shuffle.partitions at scale exactly as for a
+sort).
 
 Deterministic contract (mirrored by the driver's DuckDB oracle):
   - members sorted within the relation before chaining (role, first vertex);
@@ -142,16 +140,6 @@ def _assemble_rel(rel_id: int, roles, xs_list, ys_list) -> tuple:
     )
 
 
-def _assemble_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    row = _assemble_rel(
-        int(pdf["rel_id"].iloc[0]),
-        pdf["role"].to_numpy(),
-        pdf["xs"].to_numpy(),
-        pdf["ys"].to_numpy(),
-    )
-    return pd.DataFrame([row], columns=_OUT_COLS)
-
-
 def _assemble_partition(batches):
     """Buffer a rel_id-partitioned stream, slice groups straight from the
     raw object arrays (no per-group DataFrame), emit one frame."""
@@ -176,21 +164,14 @@ def _assemble_partition(batches):
     yield pd.DataFrame(rows, columns=_OUT_COLS)
 
 
-def assemble_multipolygons(members: DataFrame, strategy: str = "map") -> DataFrame:
+def assemble_multipolygons(members: DataFrame) -> DataFrame:
     """members(rel_id, role in {'outer','inner'}, xs, ys) -> one row per
     relation: (rel_id, n_polys, n_holes, n_dropped, area2, geometry_wkt).
 
     area2 = 2 * total polygon area (outer minus assigned holes) — exact on
     lattice coordinates, hence the bigint (the driver oracle recomputes it
-    arithmetically). `strategy` picks the physical shape (see module doc);
-    results are identical.
+    arithmetically). Physical shape: see module doc.
     """
-    if strategy == "group":
-        return members.groupBy("rel_id").applyInPandas(
-            _assemble_group, schema=_OUT_SCHEMA
-        )
-    if strategy != "map":
-        raise ValueError(f"unknown strategy {strategy!r} (use 'map' or 'group')")
     return members.repartition("rel_id").mapInPandas(
         _assemble_partition, schema=_OUT_SCHEMA
     )

@@ -76,7 +76,6 @@ def way_polygon_join(ways: DataFrame, polygons: DataFrame) -> DataFrame:
 def point_multipolygon_join(
     points: DataFrame,
     polygons: DataFrame,
-    strategy: str = "grid",
     cell_size: float = 32.0,
     max_cells_per_zone: int | None = 65536,
 ) -> DataFrame:
@@ -86,77 +85,61 @@ def point_multipolygon_join(
     multipolygon assembly).
 
     `oxs`/`oys`: outer ring open form (no closing repeat). `hxs`/`hys`:
-    array<array<double>> of hole rings (possibly empty). Both strategies
-    end in the same Arrow refine kernel (outer PIP over candidate pairs,
+    array<array<double>> of hole rings (possibly empty).
+
+    Candidates come from a computable integer-grid key (J5 pattern —
+    floor(coord / cell_size), packed) on the points and a JVM
+    explode(sequence) grid cover of each zone envelope, EQUI-joined on the
+    cell key, then a zone_id join back for the ring arrays. Every stage is
+    keyed, so cost scales with matching cells, not |points| x |zones|
+    (an envelope-range BroadcastNestedLoopJoin measured 2.2x slower
+    already at sf0.1 with 137k zones, see PARITY.md). Pick cell_size ~ the
+    typical zone diameter so a zone covers O(1) cells.
+
+    The refine is one Arrow kernel: outer PIP over the candidate pairs,
     then hole PIP over the (pair, hole) flattening with an any-hit
-    reduction — no per-row Python); they differ in candidate generation:
-
-    - 'grid' (default, the 100-TB path): computable integer-grid key
-      (J5 pattern — floor(coord / cell_size), packed) on the points, a
-      JVM explode(sequence) grid cover of each zone envelope, then an
-      EQUI-join on the cell key and a zone_id join back for the ring
-      arrays. Every stage is keyed — cost scales with matching cells, not
-      |points| x |zones|. Pick cell_size ~ the typical zone diameter so a
-      zone covers O(1) cells.
-    - 'broadcast': envelope range predicate as a BroadcastNestedLoopJoin —
-      O(|points| x |zones|) comparisons. Right ONLY when the zone table is
-      truly small; measured 2.2x slower than 'grid' already at sf0.1
-      (137k zones, see PARITY.md) and quadratically worse beyond.
+    reduction — no per-row Python.
     """
-    if strategy == "grid":
-        g = float(cell_size)
-        # pack (cx, cy) into one long: grid spans are bounded by the
-        # lon/lat-scaled domain, 2^21 cells per axis is plenty
-        def key(cx, cy):
-            return (cx.cast("long") + F.lit(1 << 20)) * F.lit(1 << 21) + (
-                cy.cast("long") + F.lit(1 << 20)
-            )
+    g = float(cell_size)
+    # pack (cx, cy) into one long: grid spans are bounded by the
+    # lon/lat-scaled domain, 2^21 cells per axis is plenty
+    def key(cx, cy):
+        return (cx.cast("long") + F.lit(1 << 20)) * F.lit(1 << 21) + (
+            cy.cast("long") + F.lit(1 << 20)
+        )
 
-        pts = points.select(
-            "node_id", "px", "py",
-            key(F.floor(F.col("px") / g), F.floor(F.col("py") / g)).alias("_cell"),
+    pts = points.select(
+        "node_id", "px", "py",
+        key(F.floor(F.col("px") / g), F.floor(F.col("py") / g)).alias("_cell"),
+    )
+    env = polygons.select(
+        "zone_id",
+        F.floor(F.array_min("oxs") / g).cast("long").alias("_cx0"),
+        F.floor(F.array_max("oxs") / g).cast("long").alias("_cx1"),
+        F.floor(F.array_min("oys") / g).cast("long").alias("_cy0"),
+        F.floor(F.array_max("oys") / g).cast("long").alias("_cy1"),
+    )
+    if max_cells_per_zone is not None:
+        # same anti-corruption guard as assign_tiles' cover cap:
+        # one world-spanning zone (or a cell_size far below the zone
+        # diameter) must not flood the join — or hit sequence()'s hard
+        # length limit — from a single row
+        env = env.filter(
+            (F.col("_cx1") - F.col("_cx0") + 1)
+            * (F.col("_cy1") - F.col("_cy0") + 1)
+            <= F.lit(int(max_cells_per_zone))
         )
-        env = polygons.select(
-            "zone_id",
-            F.floor(F.array_min("oxs") / g).cast("long").alias("_cx0"),
-            F.floor(F.array_max("oxs") / g).cast("long").alias("_cx1"),
-            F.floor(F.array_min("oys") / g).cast("long").alias("_cy0"),
-            F.floor(F.array_max("oys") / g).cast("long").alias("_cy1"),
-        )
-        if max_cells_per_zone is not None:
-            # same anti-corruption guard as assign_tiles' max_cells_per_geom:
-            # one world-spanning zone (or a cell_size far below the zone
-            # diameter) must not flood the join — or hit sequence()'s hard
-            # length limit — from a single row
-            env = env.filter(
-                (F.col("_cx1") - F.col("_cx0") + 1)
-                * (F.col("_cy1") - F.col("_cy0") + 1)
-                <= F.lit(int(max_cells_per_zone))
-            )
-        zcells = env.select(
-            "zone_id", F.explode(F.sequence("_cx0", "_cx1")).alias("_cx"),
-            "_cy0", "_cy1",
-        ).select(
-            "zone_id", "_cx", F.explode(F.sequence("_cy0", "_cy1")).alias("_cy")
-        ).select("zone_id", key(F.col("_cx"), F.col("_cy")).alias("_cell"))
-        cand = (
-            pts.join(zcells, "_cell")
-            .join(polygons, "zone_id")
-            .select("node_id", "px", "py", "zone_id", "oxs", "oys", "hxs", "hys")
-        )
-    elif strategy == "broadcast":
-        p = polygons.select(
-            "zone_id", "oxs", "oys", "hxs", "hys",
-            F.array_min("oxs").alias("_x0"), F.array_max("oxs").alias("_x1"),
-            F.array_min("oys").alias("_y0"), F.array_max("oys").alias("_y1"),
-        )
-        cand = points.join(
-            F.broadcast(p),
-            (F.col("px") >= F.col("_x0")) & (F.col("px") <= F.col("_x1"))
-            & (F.col("py") >= F.col("_y0")) & (F.col("py") <= F.col("_y1")),
-        ).select("node_id", "px", "py", "zone_id", "oxs", "oys", "hxs", "hys")
-    else:
-        raise ValueError(f"unknown strategy {strategy!r}")
+    zcells = env.select(
+        "zone_id", F.explode(F.sequence("_cx0", "_cx1")).alias("_cx"),
+        "_cy0", "_cy1",
+    ).select(
+        "zone_id", "_cx", F.explode(F.sequence("_cy0", "_cy1")).alias("_cy")
+    ).select("zone_id", key(F.col("_cx"), F.col("_cy")).alias("_cell"))
+    cand = (
+        pts.join(zcells, "_cell")
+        .join(polygons, "zone_id")
+        .select("node_id", "px", "py", "zone_id", "oxs", "oys", "hxs", "hys")
+    )
 
     def refine(batches):
         from osm_hadoop_spark.functions.spatial import point_in_polygon_pairs

@@ -7,23 +7,15 @@ analog of the reference's way×tile join filter stage, with containment
 expressed purely on the id encoding (a cell's descendants form one
 contiguous id interval: range_min/range_max).
 
-Two physical strategies, same semantics (tests assert equality):
-
-  - strategy="broadcast": broadcast the region table and join on
-    leaf BETWEEN range_min AND range_max. Right when regions fit in a
-    broadcast (the common boundary-set case — reference analog: the 39
-    region geometries of ImageRegions.scala). BroadcastNestedLoopJoin,
-    zero shuffle of the big side.
-
-  - strategy="levels" (default, the 100 TB path): regions at a given
-    level L match points on cell_parent(leaf, L) EXACTLY — so group the
-    region set by its (at most 31) distinct levels and run one hash
-    EQUI-join per level, union the results. Every join is
-    shuffle-partitioned on a computable key (broadcastable when the
-    per-level slice is small; Catalyst decides), no inequality
-    predicates anywhere, AQE-skew-splittable. The distinct-level
-    collect is bounded by 31 rows (an allowed bounded collect,
-    tests/test_no_slow_path.py whitelist).
+Physical shape (the 100 TB path): regions at a given level L match
+points on cell_parent(leaf, L) EXACTLY — so explode each point into its
+parents at the region set's (at most 31) distinct levels and run one hash
+EQUI-join on (level, cell). The join is shuffle-partitioned on a
+computable key (broadcastable when the region set is small; Catalyst
+decides), with no inequality predicate anywhere (no
+BroadcastNestedLoopJoin over leaf BETWEEN range_min AND range_max) and
+AQE-skew-splittable. The distinct-level collect is bounded by 31 rows (an
+allowed bounded collect, tests/test_no_slow_path.py whitelist).
 """
 
 from __future__ import annotations
@@ -93,7 +85,6 @@ def s2_containment_join(
     points: DataFrame,
     regions: DataFrame,
     leaf_col: str = "s2_leaf",
-    strategy: str = "levels",
 ) -> DataFrame:
     """Inner-join points to every region cell containing them.
 
@@ -101,16 +92,6 @@ def s2_containment_join(
     regions: (region_id, region_cell, level, range_min, range_max).
     Returns points columns + (region_id, region_cell).
     """
-    if strategy == "broadcast":
-        return points.join(
-            F.broadcast(regions.select("region_id", "region_cell", "range_min", "range_max")),
-            (F.col(leaf_col) >= F.col("range_min"))
-            & (F.col(leaf_col) <= F.col("range_max")),
-        ).drop("range_min", "range_max")
-
-    if strategy != "levels":
-        raise ValueError(f"unknown strategy {strategy!r}")
-
     levels = sorted(r["level"] for r in regions.select("level").distinct().collect())
     # ONE pass over the points: per-level parent ids by pure JVM arithmetic
     # ((id & -lsb) | lsb), exploded in-pipeline (x|levels| slim rows, no

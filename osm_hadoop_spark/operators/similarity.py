@@ -225,7 +225,6 @@ def embedding_neardup_pairs(
     n_planes: int = 8,
     seed: int = 42,
     probes: int = 1,
-    probe_mode: str = "slim",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (vec_a, vec_b) with
     cosine >= threshold_num/threshold_den, candidates restricted to LSH
@@ -238,17 +237,13 @@ def embedding_neardup_pairs(
     exact cosine. Threshold compared as an exact rational against the
     float score (t_num/t_den), matching the DuckDB oracle's arithmetic.
 
-    probe_mode (round-2 verdict item 2):
-      - "slim" (default, the 100 TB path): the multi-probe fan-out
-        replicates only a (vec_id, bucket) int-pair relation (n_planes+1)x
-        — never the embeddings. Candidate id-pairs come out of the
-        bucket equi-join; the embedding vectors are joined back ONLY for
-        the bucket-bounded survivors (the same join-back-for-survivors
-        shape as dedup_minhash_lsh). Shuffle bytes drop ~20x vs "explode"
-        at dim=64 (measured in PARITY.md via the stage REST metrics).
-      - "explode" (legacy): replicates the full embedding rows
-        (n_planes+1)x before the join — kept for the interleaved A/B
-        regression harness and the equivalence test.
+    The multi-probe fan-out replicates only a (vec_id, bucket) int-pair
+    relation (n_planes+1)x, never the embeddings. Candidate id-pairs come
+    out of the bucket equi-join; the embedding vectors are joined back
+    ONLY for the bucket-bounded survivors (the same join-back-for-survivors
+    shape as dedup_minhash_lsh). Shuffle bytes are ~20x below replicating
+    the embedding rows at dim=64 (measured in PARITY.md via the stage REST
+    metrics).
     """
     b = lsh_bucket_udf(dim, n_planes, seed)
     emb_b = embeddings.select("vec_id", "embedding").withColumn(
@@ -257,33 +252,7 @@ def embedding_neardup_pairs(
     flip_cols = lambda: F.array(F.col("bucket"), *[  # noqa: E731
         F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(n_planes)
     ])
-    # cosine_col (left-to-right JVM summation), NOT the einsum kernel:
-    # `score` is an OUTPUT column here, so it must match the DuckDB
-    # oracle's list_cosine_similarity bit-for-bit (proven by the
-    # embedding_topk oracle); the ANN top-k paths can use einsum because
-    # they emit only ranks
-    if probe_mode == "explode":
-        a = emb_b.select(
-            F.col("bucket"), F.col("vec_id").alias("vec_a"),
-            F.col("embedding").alias("emb_a"),
-        )
-        bb = emb_b.select(
-            F.col("bucket").alias("bucket_b"), F.col("vec_id").alias("vec_b"),
-            F.col("embedding").alias("emb_b"),
-        )
-        if probes > 0:
-            a = a.withColumn("bucket", F.explode(flip_cols()))
-        pairs = (
-            a.join(bb, a["bucket"] == bb["bucket_b"])
-            .filter(F.col("vec_a") < F.col("vec_b"))
-            .select("vec_a", "vec_b",
-                    cosine_col("emb_a", "emb_b").alias("score"))
-        )
-        return pairs.filter(
-            F.col("score") * threshold_den >= F.lit(float(threshold_num))
-        ).select("vec_a", "vec_b", "score")
-
-    # slim path: fan out (vec_id, bucket) only. Probe buckets within one
+    # Fan out (vec_id, bucket) only. Probe buckets within one
     # explosion are pairwise distinct and each right row lives in exactly
     # one bucket, so each qualifying pair still appears exactly once.
     left = emb_b.select(F.col("vec_id").alias("vec_a"), "bucket")
@@ -301,6 +270,11 @@ def embedding_neardup_pairs(
                            F.col("embedding").alias("emb_a"))
     eb = embeddings.select(F.col("vec_id").alias("vec_b"),
                            F.col("embedding").alias("emb_b"))
+    # cosine_col (left-to-right JVM summation), NOT the einsum kernel:
+    # `score` is an OUTPUT column here, so it must match the DuckDB
+    # oracle's list_cosine_similarity bit-for-bit (proven by the
+    # embedding_topk oracle); the ANN top-k paths can use einsum because
+    # they emit only ranks
     pairs = (
         cand.join(ea, "vec_a").join(eb, "vec_b")
         .select("vec_a", "vec_b", cosine_col("emb_a", "emb_b").alias("score"))

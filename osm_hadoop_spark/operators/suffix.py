@@ -6,24 +6,22 @@ BWT-style compression stats. This implements the corpus-scale primitive:
 rank every suffix of every document in global lexicographic order of its
 content, by prefix doubling — round k upgrades h-order ranks to 2h-order
 ranks using the pair (rank[pos], rank[pos+h]), so O(log maxlen) rounds
-total (Manber & Myers 1993), each round = one equi-self-join + one dense
-rank. Equal suffixes (across documents) share a rank; a suffix that runs
+total (Manber & Myers 1993), each round = one lead() window + one
+class-partitioned rank window. Equal suffixes (across documents) share a rank; a suffix that runs
 out inside the horizon takes rank2 = −1, which is exactly "shorter sorts
 first" under string order.
 
-No global window anywhere: dense rank is the two-level prefix-sum shape
-shared with operators/ranges.py — per-key collapse, coarse-bucket
-subtotals (the only ordered window, over a relation ~#distinct-keys /
-2^coarse_bits — the caller's documented bound, same contract as
-balanced_range_buckets), partitioned ranks within coarse buckets. Pair
-keys pack as rank << 32 | (rank2+1), exact for corpora under 2^31
-positions per shard (shard the corpus above that, ranks compose by
-concatenation of shard order).
+No global window anywhere: the initial and final ranks are the
+two-level prefix-sum shape shared with operators/ranges.py — per-key
+collapse, coarse-bucket subtotals (the only ordered window, over a
+relation ~#distinct-keys / 2^coarse_bits — the caller's documented bound,
+same contract as balanced_range_buckets), partitioned ranks within coarse
+buckets.
 
-Early stop: a round that leaves every rank distinct has fully ordered the
-suffixes; the check is one count/count-distinct aggregate (a bounded
-scalar to the driver, the kNN round-control posture). Each round's frame
-is localCheckpoint'ed — iterative-lineage truncation, the cc.py idiom.
+Early stop: a round that changes no rank has reached the fixpoint; the
+check is one count aggregate (a bounded scalar to the driver, the kNN
+round-control posture). Each round's frame is localCheckpoint'ed —
+iterative-lineage truncation, the cc.py idiom.
 
 The DuckDB twin is maximally independent: it materializes suffix STRINGS
 (substr(text, pos)) and dense-ranks them with a plain ORDER BY — byte-wise
@@ -113,8 +111,7 @@ def _packed_prefix(width: int, bits: int):
 
 
 def suffix_ranks(
-    docs: DataFrame, text: str = "text", max_rounds: int = 12,
-    conv: str = "max", impl: str = "window",
+    docs: DataFrame, text: str = "text", max_rounds: int = 12
 ) -> DataFrame:
     """(doc_id, pos, suffix_rank): dense global rank of every suffix by
     content. See module docstring for the round structure.
@@ -129,9 +126,8 @@ def suffix_ranks(
         positions are dense within a document, so the window is exactly
         the textbook pair lookup without the round's equi-self-join.
 
-    impl="window" (default, measured ~2x on the bench corpus): rounds
-    carry POSITION-COUNT ranks (rank = #positions with strictly smaller
-    h-prefix, RANK()-1 semantics) instead of dense ranks. The update is
+    Rounds carry POSITION-COUNT ranks (rank = #positions with strictly
+    smaller h-prefix, RANK()-1 semantics) instead of dense ranks. The update is
     then ONE class-partitioned window —
         new_rank = rank + RANK() over (partition by rank order by r2) - 1
     — no per-round distinct, no join-back, no pair packing (count ranks
@@ -143,8 +139,9 @@ def suffix_ranks(
     real text (the all-one-character corpus degrades to one class — the
     same adversarial case the textbook algorithm has). Fixpoint = a round
     that changes NO rank (exact: an unsplit class can never split later);
-    dense ranks are recovered ONCE at the end. impl="legacy" keeps the
-    per-round dense-rank form for --ab measurement.
+    dense ranks are recovered ONCE at the end. Against a per-round
+    dense-rank update (pair-packed key + distinct + join-back) this
+    measured ~2x on the bench corpus.
     """
     d = docs.select("doc_id", F.col(text).alias("_t")).filter(
         F.length("_t") > 0
@@ -166,46 +163,7 @@ def suffix_ranks(
         width, bits = 7, 8
     else:
         width, bits = 2, 21
-    if impl == "window":
-        cur = rank_by_count(
-            pos_df.select(
-                "doc_id", "pos", _packed_prefix(width, bits).alias("code")
-            ),
-            "code",
-            out="rank",
-            coarse_bits=44,
-        ).select("doc_id", "pos", "rank").localCheckpoint(eager=True)
-        h = width
-        w = Window.partitionBy("doc_id").orderBy("pos")
-        for _ in range(max_rounds):
-            if h >= max_len:
-                break
-            paired = cur.select(
-                "doc_id", "pos", F.col("rank").alias("r0"),
-                F.coalesce(F.lead("rank", h).over(w), F.lit(-1)).alias("r2"),
-            )
-            wc = Window.partitionBy("r0").orderBy("r2")
-            nxt = (
-                paired.select(
-                    "doc_id", "pos", "r0",
-                    (F.col("r0") + F.rank().over(wc) - 1).alias("rank"),
-                )
-                .withColumn("chg", F.col("rank") != F.col("r0"))
-                .localCheckpoint(eager=True)
-            )
-            cur = nxt.select("doc_id", "pos", "rank")
-            h *= 2
-            if h >= max_len:
-                break  # next iteration exits anyway — skip the chg count
-            if nxt.filter("chg").count() == 0:
-                break
-        else:
-            raise RuntimeError("suffix_ranks: max_rounds exhausted")
-        return dense_rank_scalable(
-            cur, "rank", out="suffix_rank", coarse_bits=16
-        ).select("doc_id", "pos", "suffix_rank")
-
-    cur = dense_rank_scalable(
+    cur = rank_by_count(
         pos_df.select(
             "doc_id", "pos", _packed_prefix(width, bits).alias("code")
         ),
@@ -213,52 +171,35 @@ def suffix_ranks(
         out="rank",
         coarse_bits=44,
     ).select("doc_id", "pos", "rank").localCheckpoint(eager=True)
-    n_total = cur.count()
     h = width
     w = Window.partitionBy("doc_id").orderBy("pos")
-    # Stop at the FIXPOINT, not at all-distinct: corpora contain equal
-    # suffixes ACROSS documents (shared tails), so the distinct count d
-    # never reaches n_total — but a doubling round that splits no rank
-    # class can never split one later (r(p)=r(q) with no h-split forces
-    # r(p+h)=r(q+h) inductively at every shift, i.e. equal suffixes), so
-    # d reaching a plateau IS convergence. d == n_total still exits
-    # without the confirmation round.
-    # convergence stat: ranks are DENSE 0-based (dense_rank_scalable
-    # contract), so the distinct count is max(rank)+1 — a plain scan of
-    # the just-checkpointed frame instead of a countDistinct shuffle
-    # (one full exchange of the position relation saved PER ROUND;
-    # conv="distinct" keeps the legacy form for --ab measurement).
-    def _n_classes() -> int:
-        if conv == "distinct":
-            return cur.agg(F.countDistinct("rank")).collect()[0][0]
-        return cur.agg(F.max("rank")).collect()[0][0] + 1
-
-    prev_d = -1
     for _ in range(max_rounds):
         if h >= max_len:
             break
-        d = _n_classes()
-        if d == n_total or d == prev_d:
-            break
-        prev_d = d
-        nxt = cur.select(
-            "doc_id",
-            "pos",
-            (
-                F.shiftleft(F.col("rank"), 32)
-                + F.coalesce(F.lead("rank", h).over(w), F.lit(-1))
-                + 1
-            ).alias("pair"),
+        paired = cur.select(
+            "doc_id", "pos", F.col("rank").alias("r0"),
+            F.coalesce(F.lead("rank", h).over(w), F.lit(-1)).alias("r2"),
         )
-        cur = (
-            dense_rank_scalable(nxt, "pair", out="rank", coarse_bits=40)
-            .select("doc_id", "pos", "rank")
+        wc = Window.partitionBy("r0").orderBy("r2")
+        nxt = (
+            paired.select(
+                "doc_id", "pos", "r0",
+                (F.col("r0") + F.rank().over(wc) - 1).alias("rank"),
+            )
+            .withColumn("chg", F.col("rank") != F.col("r0"))
             .localCheckpoint(eager=True)
         )
+        cur = nxt.select("doc_id", "pos", "rank")
         h *= 2
-    return cur.select(
-        "doc_id", "pos", F.col("rank").alias("suffix_rank")
-    )
+        if h >= max_len:
+            break  # next iteration exits anyway — skip the chg count
+        if nxt.filter("chg").count() == 0:
+            break
+    else:
+        raise RuntimeError("suffix_ranks: max_rounds exhausted")
+    return dense_rank_scalable(
+        cur, "rank", out="suffix_rank", coarse_bits=16
+    ).select("doc_id", "pos", "suffix_rank")
 
 
 def lcp_adjacent(

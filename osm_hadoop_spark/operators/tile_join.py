@@ -53,6 +53,10 @@ from osm_hadoop_spark.functions.tiles_sql import (
     sql_ytile,
 )
 
+# assign_tiles' anti-corruption guard: a geometry whose envelope cover
+# exceeds this many cells is dropped before enumeration
+MAX_CELLS_PER_GEOM = 65536
+
 
 def _sql_segment_rows(
     env: DataFrame, id_col: str = "_id", carry: tuple[str, ...] = ()
@@ -91,22 +95,21 @@ def _flat_coords(pdf: pd.DataFrame):
     ys = np.concatenate(pdf["ys"].to_numpy()) if counts.sum() else np.zeros(0)
     return xs, ys, counts
 
+
 def assign_tiles(
     ways: DataFrame,
     zoom: int,
     tms: bool = True,
     buffer_deg: float = 0.0,
     refine: bool = True,
-    id_col: str = "way_id",
-    max_cells_per_geom: int | None = 65536,
     cover_impl: str = "arrow",
 ) -> DataFrame:
-    """ways(id_col, xs, ys) -> (id_col, tile_id) surviving pairs.
+    """ways(way_id, xs, ys) -> (way_id, tile_id) surviving pairs.
 
     `refine=False` returns the raw envelope cover (the filter stage only).
-    `max_cells_per_geom` drops geometries whose envelope cover exceeds the
-    cap BEFORE enumeration — the anti-corruption guard for fixed-zoom covers
-    (same rationale as the reference's F6 length guard,
+    Geometries whose envelope cover exceeds MAX_CELLS_PER_GEOM cells are
+    dropped BEFORE enumeration — the anti-corruption guard for fixed-zoom
+    covers (same rationale as the reference's F6 length guard,
     WayRasterizer.scala:165-168): one corrupt world-spanning geometry would
     otherwise materialize millions of candidate pairs inside a single task.
 
@@ -132,10 +135,9 @@ def assign_tiles(
     tms_f = bool(tms)
     buf = float(buffer_deg)
     do_refine = bool(refine)
-    max_cells = max_cells_per_geom
 
     # an empty coordinate array has no envelope: drop it before either kernel
-    src = ways.select(F.col(id_col).alias("_id"), "xs", "ys").filter(F.size("xs") > 0)
+    src = ways.select(F.col("way_id").alias("_id"), "xs", "ys").filter(F.size("xs") > 0)
 
     if cover_impl not in ("arrow", "jvm"):
         raise ValueError(f"unknown cover_impl {cover_impl!r} (use 'arrow' or 'jvm')")
@@ -150,20 +152,19 @@ def assign_tiles(
             sql_ytile(F.array_max("ys") + buf, zoom).alias("ty0"),
             sql_ytile(F.array_min("ys") - buf, zoom).alias("ty1"),
         )
-        if max_cells is not None:
-            # guard stays on the WAY envelope (identical semantics to the
-            # Arrow kernel) even though the refine covers per segment below
-            env = env.filter(
-                (F.col("tx1") - F.col("tx0") + 1) * (F.col("ty1") - F.col("ty0") + 1)
-                <= F.lit(int(max_cells))
-            )
+        # guard stays on the WAY envelope (identical semantics to the
+        # Arrow kernel) even though the refine covers per segment below
+        env = env.filter(
+            (F.col("tx1") - F.col("tx0") + 1) * (F.col("ty1") - F.col("ty0") + 1)
+            <= F.lit(MAX_CELLS_PER_GEOM)
+        )
         if not do_refine:
             pairs = env.select(
                 "_id", F.explode(F.sequence("tx0", "tx1")).alias("xt"), "ty0", "ty1"
             ).select("_id", "xt", F.explode(F.sequence("ty0", "ty1")).alias("yt"))
             yt = ((1 << zoom) - 1) - F.col("yt") if tms_f else F.col("yt")
             return pairs.select(
-                F.col("_id").alias(id_col),
+                F.col("_id").alias("way_id"),
                 sql_pack_tile(zoom, F.col("xt"), yt).alias("tile_id"),
             )
         segs = _sql_segment_rows(env, carry=("tx0", "tx1", "ty0", "ty1"))
@@ -248,7 +249,7 @@ def assign_tiles(
         return (
             cand.filter(hit)
             .groupBy(
-                F.col("_id").alias(id_col),
+                F.col("_id").alias("way_id"),
                 sql_pack_tile(zoom, F.col("xt"), yt).alias("tile_id"),
             )
             .agg(F.lit(1).alias("_one"))
@@ -256,12 +257,16 @@ def assign_tiles(
         )
 
     def emit(batches):
+        import sys
+
         from osm_hadoop_spark.functions.geometry import envelopes_flat
         from osm_hadoop_spark.functions.spatial import (
             polyline_box_dist_sq,
             polyline_box_intersects,
         )
         from osm_hadoop_spark.functions.tiles import (
+            _xtile,
+            _ytile,
             tile_bounds,
             tiles_for_envelope_flat,
         )
@@ -271,24 +276,21 @@ def assign_tiles(
                 continue
             xs, ys, counts = _flat_coords(pdf)
             xmin, ymin, xmax, ymax = envelopes_flat(xs, ys, counts)
-            if max_cells is not None:
-                import sys
-
-                from osm_hadoop_spark.functions.tiles import _xtile, _ytile
-
-                nx = _xtile(xmax + buf, zoom) - _xtile(xmin - buf, zoom) + 1
-                ny = _ytile(ymin - buf, zoom) - _ytile(ymax + buf, zoom) + 1
-                ok = nx * ny <= max_cells
-                if not ok.all():
-                    print(
-                        f"assign_tiles: dropped {int((~ok).sum())} geometries "
-                        f"exceeding {max_cells} cells at z{zoom}",
-                        file=sys.stderr,
-                    )
-                    keep_coord = np.repeat(ok, counts)
-                    xs, ys, counts = xs[keep_coord], ys[keep_coord], counts[ok]
-                    pdf = pdf.loc[ok].reset_index(drop=True)
-                    xmin, ymin, xmax, ymax = xmin[ok], ymin[ok], xmax[ok], ymax[ok]
+            nx = _xtile(xmax + buf, zoom) - _xtile(xmin - buf, zoom) + 1
+            ny = _ytile(ymin - buf, zoom) - _ytile(ymax + buf, zoom) + 1
+            ok = nx * ny <= MAX_CELLS_PER_GEOM
+            if not ok.all():
+                print(
+                    f"assign_tiles: dropped {int((~ok).sum())} geometries "
+                    f"exceeding {MAX_CELLS_PER_GEOM} cells at z{zoom}",
+                    file=sys.stderr,
+                )
+                if not ok.any():
+                    continue  # the envelope cover below needs >= 1 geometry
+                keep_coord = np.repeat(ok, counts)
+                xs, ys, counts = xs[keep_coord], ys[keep_coord], counts[ok]
+                pdf = pdf.loc[ok].reset_index(drop=True)
+                xmin, ymin, xmax, ymax = xmin[ok], ymin[ok], xmax[ok], ymax[ok]
             tiles, env_idx = tiles_for_envelope_flat(
                 xmin - buf, ymin - buf, xmax + buf, ymax + buf, zoom, tms=tms_f
             )
@@ -311,8 +313,8 @@ def assign_tiles(
                 tiles, ids = tiles[keep], ids[keep]
             yield pd.DataFrame({"_id": ids, "tile_id": tiles})
 
-    out = src.mapInPandas(emit, schema=f"_id long, tile_id bigint")
-    return out.withColumnRenamed("_id", id_col)
+    out = src.mapInPandas(emit, schema="_id long, tile_id bigint")
+    return out.withColumnRenamed("_id", "way_id")
 
 
 def tile_counts(assigned: DataFrame) -> DataFrame:
@@ -329,7 +331,6 @@ def rasterize_tile_bitsets(
     zoom: int,
     buffer_deg: float,
     tms: bool = True,
-    tile_px: int = TILE_SIZE,
 ) -> DataFrame:
     """Per-(way, tile): burn the buffered way into a tile-local bitmask.
 
@@ -338,13 +339,12 @@ def rasterize_tile_bitsets(
     is set iff its CENTER lies within `buffer_deg` of the polyline — the
     exact round-capped buffer region, computed by the point-to-polyline
     distance kernel (no polygon approximation). Output bitset is packed
-    bits (tile_px*tile_px/8 bytes); shuffle compression replaces Snappy
+    bits (TILE_SIZE*TILE_SIZE/8 bytes); shuffle compression replaces Snappy
     (E15 — spark.shuffle.compress).
     """
     zoom = int(zoom)
     tms_f = bool(tms)
     buf = float(buffer_deg)
-    npx = int(tile_px)
 
     assigned = assign_tiles(ways, zoom, tms=tms_f, buffer_deg=buf)
     paired = assigned.join(ways.select("way_id", "xs", "ys"), "way_id")
@@ -352,7 +352,7 @@ def rasterize_tile_bitsets(
     def burn(batches):
         for pdf in batches:
             if pdf.shape[0]:
-                yield burn_batch_bitsets(pdf, tms_f, buf, npx)
+                yield burn_batch_bitsets(pdf, tms_f, buf, TILE_SIZE)
 
     return paired.mapInPandas(burn, schema="tile_id bigint, bitset binary")
 

@@ -71,8 +71,11 @@ def assemble_ways(ways: DataFrame, referenced: DataFrame) -> DataFrame:
         .select(
             "way_id",
             "tags",
-            F.transform("pts", lambda p: p["lon"]).alias("xs"),
-            F.transform("pts", lambda p: p["lat"]).alias("ys"),
+            # struct-field extraction over the array is codegen; a
+            # transform() lambda would be re-evaluated interpreted by every
+            # downstream expression Catalyst pushes below this projection
+            F.col("pts.lon").alias("xs"),
+            F.col("pts.lat").alias("ys"),
             F.size("pts").alias("n_pts"),
         )
     )

@@ -33,13 +33,10 @@ class Pipeline:
     spark: SparkSession
     catalog: SnapshotCatalog
     stages: list[tuple[str, Callable[["Pipeline"], DataFrame]]] = field(default_factory=list)
-    partition_by: dict[str, list[str]] = field(default_factory=dict)
 
-    def stage(self, name: str, partition_by: list[str] | None = None):
+    def stage(self, name: str):
         def deco(fn):
             self.stages.append((name, fn))
-            if partition_by:
-                self.partition_by[name] = partition_by
             return fn
         return deco
 
@@ -54,7 +51,7 @@ class Pipeline:
                 results.append(StageResult(name, True, time.time() - t0, None))
                 continue
             df = fn(self)
-            snap = self.catalog.write(df, name, self.partition_by.get(name))
+            snap = self.catalog.write(df, name)
             results.append(StageResult(name, False, time.time() - t0, snap))
         return results
 

@@ -2,8 +2,8 @@
 
 The brute force below is the textbook O(n^2) definition — full distance
 matrix, union-find over core-core edges, min-label border rule — sharing
-NO code with the operator. Both strategies ('star' dense-cell shortcut
-and 'pairs' naive grid) must reproduce it label-for-label.
+NO code with the operator, which must reproduce it label-for-label,
+including on inputs where the dense-cell shortcut carries most points.
 """
 
 from __future__ import annotations
@@ -74,14 +74,13 @@ def clustered_points(spark):
     return spark.createDataFrame(pts, "id long, x long, y long").cache(), pts
 
 
-@pytest.mark.parametrize("strategy", ["star", "pairs"])
-def test_dbscan_matches_brute_force(spark, clustered_points, strategy):
+def test_dbscan_matches_brute_force(spark, clustered_points):
     from osm_hadoop_spark.operators.clustering import dbscan
 
     df, pts = clustered_points
     got = {
         r["id"]: (r["role"], r["cluster"])
-        for r in dbscan(df, eps=40, min_pts=5, dense_cells=strategy).collect()
+        for r in dbscan(df, eps=40, min_pts=5).collect()
     }
     want = _brute_dbscan(pts, eps=40, min_pts=5)
     assert got == want
@@ -90,17 +89,18 @@ def test_dbscan_matches_brute_force(spark, clustered_points, strategy):
 
 
 def test_dbscan_star_skips_dense_self_cell(spark, clustered_points):
-    """The star strategy's point: tight clusters (dense cells) must not
-    enumerate in-cell pairs. With spread << eps most cluster mass sits in
-    dense cells, so the star plan's candidate-pair count must be well
-    below the naive plan's."""
+    """The dense-cell star: with spread << eps every point sits in a dense
+    cell, so coreness comes from cell counts and in-cell pairs are never
+    enumerated. The labels must still equal the brute force."""
     from osm_hadoop_spark.operators.clustering import dbscan
 
     df, _ = clustered_points
     tight = df.select("id", (F.col("x") % 9).alias("x"), (F.col("y") % 9).alias("y"))
-    a = dbscan(tight, eps=40, min_pts=5, dense_cells="star")
-    b = dbscan(tight, eps=40, min_pts=5, dense_cells="pairs")
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    got = {
+        r["id"]: (r["role"], r["cluster"])
+        for r in dbscan(tight, eps=40, min_pts=5).collect()
+    }
+    assert got == _brute_dbscan([tuple(r) for r in tight.collect()], eps=40, min_pts=5)
 
 
 def test_dbscan_all_noise_and_singletons(spark):

@@ -1,5 +1,6 @@
 """Focal raster statistics (operators/focal.py) vs a dict-based Python
-brute force, plus separable == direct strategy equivalence."""
+brute force, at a k that selects each evaluation (direct at k <= 1,
+separable at k >= 2)."""
 
 import random
 
@@ -21,8 +22,8 @@ def _brute(cells, k, mean_bits=10):
     return out
 
 
-@pytest.mark.parametrize("strategy", ["separable", "direct"])
-def test_focal_matches_brute_force(spark, strategy):
+@pytest.mark.parametrize("k", [2, 1], ids=["separable", "direct"])
+def test_focal_matches_brute_force(spark, k):
     from osm_hadoop_spark.operators.focal import focal_stats
 
     rng = random.Random(3)
@@ -36,9 +37,9 @@ def test_focal_matches_brute_force(spark, strategy):
     df = spark.createDataFrame(cells, "cx: long, cy: long, v: long")
     got = {
         (r["cx"], r["cy"]): (r["fsum"], r["fn"], r["fmax"], r["fmean_q"])
-        for r in focal_stats(df, k=2, strategy=strategy).collect()
+        for r in focal_stats(df, k=k).collect()
     }
-    assert got == _brute(cells, 2)
+    assert got == _brute(cells, k)
 
 
 def test_focal_k0_is_identity(spark):

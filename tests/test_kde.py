@@ -33,14 +33,13 @@ def kde_points(spark):
     return spark.createDataFrame(pts, "x long, y long").cache(), pts
 
 
-@pytest.mark.parametrize("strategy", ["separable", "direct"])
-def test_kde_matches_brute_force(spark, kde_points, strategy):
+def test_kde_matches_brute_force(spark, kde_points):
     from osm_hadoop_spark.operators.kde import kde_grid
 
     df, pts = kde_points
     got = {
         (r["cx"], r["cy"]): r["density"]
-        for r in kde_grid(df, cell_size=25, radius=3, strategy=strategy).collect()
+        for r in kde_grid(df, cell_size=25, radius=3).collect()
     }
     assert got == _brute_kde(pts, 25, 3)
 

@@ -138,12 +138,18 @@ def test_point_multipolygon_join_hole_exclusion(spark):
     assert got == [(1, 1), (3, 2)]
 
 
-def test_strategies_identical(spark, synth_docs):
-    """map (partition-buffered) and group (applyInPandas) strategies must
-    produce identical rows on irregular member sets."""
+def test_partition_assembly_matches_per_relation_oracle(spark, synth_docs):
+    """The partition-buffered mapInPandas assembly must equal a driver-side
+    oracle that groups the members by rel_id and assembles each relation
+    on its own, on irregular member sets."""
+    from collections import defaultdict
+
     from pyspark.sql import functions as F
 
-    from osm_hadoop_spark.operators.polygon_assembly import assemble_multipolygons
+    from osm_hadoop_spark.operators.polygon_assembly import (
+        _assemble_rel,
+        assemble_multipolygons,
+    )
 
     # derive scruffy members from the synth corpus way geometry: close each
     # way's envelope into a rectangle ring, every 3rd one as a hole
@@ -162,9 +168,17 @@ def test_strategies_identical(spark, synth_docs):
             F.array_max("ys"), F.array_min("ys"),
         ).alias("ys"),
     ).filter(F.col("xs")[0] < F.col("xs")[1])
-    a = {r["rel_id"]: r for r in assemble_multipolygons(mem, "map").collect()}
-    b = {r["rel_id"]: r for r in assemble_multipolygons(mem, "group").collect()}
-    assert a == b and len(a) == 37
+    # pin the limit()ed rows: the operator and the oracle must see the same
+    mem = mem.localCheckpoint()
+    got = {r["rel_id"]: tuple(r) for r in assemble_multipolygons(mem).collect()}
+    groups = defaultdict(lambda: ([], [], []))
+    for r in mem.collect():
+        roles, xs, ys = groups[r["rel_id"]]
+        roles.append(r["role"])
+        xs.append(r["xs"])
+        ys.append(r["ys"])
+    want = {rel: _assemble_rel(rel, *cols) for rel, cols in groups.items()}
+    assert got == want and len(got) == 37
 
 
 # ---------------------------------------------------------------------------
@@ -230,11 +244,13 @@ def test_chain_reconstructs_split_rectangles(rects, rnd):
     assert got == want
 
 
-def test_point_multipolygon_join_strategies_agree(spark, synth_docs):
-    """grid (equi-join scale path) and broadcast (BNLJ small-dim path) must
-    produce the identical pair set."""
+def test_point_multipolygon_join_matches_brute_force(spark, synth_docs):
+    """The grid equi-join candidates plus refine must produce the pair set
+    of a NumPy brute force over every (point, zone) pair whose envelope
+    contains the point, refined by the same PIP kernel."""
     from pyspark.sql import functions as F
 
+    from osm_hadoop_spark.functions.spatial import point_in_polygon_pairs
     from osm_hadoop_spark.operators.polygon_join import point_multipolygon_join
     from osm_hadoop_spark.operators.way_assembly import build_ways_geom
 
@@ -248,6 +264,8 @@ def test_point_multipolygon_join_strategies_agree(spark, synth_docs):
         F.array().cast("array<array<double>>").alias("hxs"),
         F.array().cast("array<array<double>>").alias("hys"),
     ).filter(F.col("oxs")[0] < F.col("oxs")[1])
+    # pin the limit()ed rows: the operator and the oracle must see the same
+    polys = polys.localCheckpoint()
     # points = the corpus's own nodes, jittered: way envelopes are ~0.1 deg,
     # so only coordinates drawn from the same distribution produce hits
     from osm_hadoop_spark.sources.spans import parse_nodes
@@ -257,11 +275,27 @@ def test_point_multipolygon_join_strategies_agree(spark, synth_docs):
         (F.col("lon") + (F.col("node_id") % 3 - 1) * 0.01).alias("px"),
         (F.col("lat") + (F.col("node_id") % 5 - 2) * 0.01).alias("py"),
     )
-    a = sorted((r["node_id"], r["zone_id"]) for r in
-               point_multipolygon_join(pts, polys, strategy="grid", cell_size=0.25).collect())
-    b = sorted((r["node_id"], r["zone_id"]) for r in
-               point_multipolygon_join(pts, polys, strategy="broadcast").collect())
-    assert a == b and len(a) > 0
+    got = sorted((r["node_id"], r["zone_id"]) for r in
+                 point_multipolygon_join(pts, polys, cell_size=0.25).collect())
+    p = pts.toPandas()
+    z = polys.toPandas()
+    oxs = [np.asarray(v, dtype=np.float64) for v in z["oxs"]]
+    oys = [np.asarray(v, dtype=np.float64) for v in z["oys"]]
+    px, py = p["px"].to_numpy(), p["py"].to_numpy()
+    in_env = np.stack([
+        (px >= x.min()) & (px <= x.max()) & (py >= y.min()) & (py <= y.max())
+        for x, y in zip(oxs, oys)
+    ], axis=1)
+    pi, zi = np.nonzero(in_env)
+    counts = np.array([len(oxs[j]) for j in zi], dtype=np.int64)
+    inside = point_in_polygon_pairs(
+        px[pi], py[pi],
+        np.concatenate([oxs[j] for j in zi]), np.concatenate([oys[j] for j in zi]),
+        counts,
+    )
+    want = sorted(zip(p["node_id"].to_numpy()[pi[inside]].tolist(),
+                      z["zone_id"].to_numpy()[zi[inside]].tolist()))
+    assert got == want and len(got) > 0
 
 
 def test_reversed_duplicate_fragments_dedupe_to_one_ring():

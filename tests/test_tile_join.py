@@ -111,6 +111,30 @@ def test_assign_tiles_drops_empty_coordinate_arrays(spark, cover_impl, buffer_de
     assert want and pairs(ways) == want
 
 
+@pytest.mark.parametrize("cover_impl", ["jvm", "arrow"])
+def test_assign_tiles_cover_guard_drops_oversized_envelope(spark, cover_impl):
+    """A way whose envelope covers more than MAX_CELLS_PER_GEOM tiles is
+    dropped before enumeration; the valid way next to it keeps its pairs."""
+    from osm_hadoop_spark.functions.tiles import _xtile, _ytile
+    from osm_hadoop_spark.operators.tile_join import MAX_CELLS_PER_GEOM
+
+    big_xs, big_ys = [10.0, 16.0], [50.0, 56.0]
+    nx = _xtile(np.array([big_xs[1]]), 14) - _xtile(np.array([big_xs[0]]), 14) + 1
+    ny = _ytile(np.array([big_ys[0]]), 14) - _ytile(np.array([big_ys[1]]), 14) + 1
+    assert int(nx[0] * ny[0]) > MAX_CELLS_PER_GEOM
+    ways = spark.createDataFrame(
+        [(1, [10.0, 10.01], [50.0, 50.01]), (2, big_xs, big_ys)],
+        "way_id long, xs array<double>, ys array<double>",
+    )
+
+    def pairs(df):
+        out = assign_tiles(df, 14, tms=False, cover_impl=cover_impl)
+        return {(r["way_id"], r["tile_id"]) for r in out.collect()}
+
+    want = pairs(ways.filter("way_id = 1"))
+    assert want and pairs(ways) == want
+
+
 def test_bitset_burn_and_or_composite(spark):
     # two ways crossing one z13 tile; composite must equal elementwise OR
     ways = spark.createDataFrame(
