@@ -7276,8 +7276,9 @@ _W_MOD = 1152921504606846976  # 2^60: keeps words positive, 15 hex digits
 
 def _q_bitset_or(spark, sf_dir):
     # A6: per-tile bitwise-OR composite over binary bitsets via the real
-    # salted two-level applyInPandas operator; words packed to big-endian
-    # binary JVM-side (hex/unhex) and unpacked back for the value oracle
+    # operator (native bitmap_or_agg over 4096-byte slices); words packed to
+    # big-endian binary JVM-side (hex/unhex) and unpacked back for the value
+    # oracle
     from osm_hadoop_spark.operators.tile_join import or_composite_bitsets
 
     li = _t(spark, sf_dir, "lineitem")

@@ -132,9 +132,14 @@ def _sql_ring_body(xs: Column, ys: Column) -> Column:
     It applies only when no ordinate needs band reassembly: any 'E'
     (Java E-notation, |v| >= 1e7 or < 1e-3) or a '-0.0' (Python prints
     '0') falls back to the per-element sql_fmt_ord path, so the output is
-    byte-identical either way (pinned by the jvm==arrow WKT tests)."""
+    byte-identical either way (pinned by the jvm==arrow WKT tests). A null
+    ordinate (cast as 'null') falls back too: the per-element path drops
+    its vertex."""
     zs = F.arrays_zip(xs, ys).cast("string")
-    fast_ok = ~(F.contains(zs, F.lit("E")) | F.contains(zs, F.lit("-0.0")))
+    fast_ok = ~(
+        F.contains(zs, F.lit("E")) | F.contains(zs, F.lit("-0.0"))
+        | F.contains(zs, F.lit("null"))
+    )
     body = F.substring(zs, F.lit(3), F.length(zs) - 4)
     body = F.replace(body, F.lit("}, {"), F.lit("; "))
     body = F.replace(body, F.lit(", "), F.lit(" "))

@@ -86,18 +86,6 @@ def rank_by_count(
     return df.join(ranked, df[key] == ranked["_k"]).drop("_k")
 
 
-def suffix_positions(docs: DataFrame, text: str = "text") -> DataFrame:
-    """(doc_id, pos 1-based, code = codepoint of the char at pos)."""
-    d = docs.select("doc_id", F.col(text).alias("_t")).filter(
-        F.length("_t") > 0
-    )
-    return d.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(1), F.length("_t"))).alias("pos"),
-        F.expr("ascii(substring(_t, pos, 1))").alias("code"),
-    )
-
-
 def _packed_prefix(width: int, bits: int):
     """Big-endian fixed-width pack of `width` leading codepoints into one
     bigint (suffix chars past end-of-string pack as 0). Numeric order of

@@ -23,11 +23,15 @@ env), a tile intersects buffer(line, d) EXACTLY when dist(line, tile_box)
 <= d — segment-to-box distance kernel; same result set as the reference's
 buffer+intersects, without polygon construction.
 
-Skew: dense cells (urban areas) concentrate pairs. The count aggregate
-combines map-side on its own; the bitset OR gets no partial aggregation,
-so `or_composite_bitsets(salted=True)` pre-combines per (tile, salt) then
-merges — the explicit salt path demanded by the north rule. AQE skew-join
-handles the join side.
+Skew: dense cells (urban areas) concentrate pairs. Both reduces combine
+map-side, so a hot tile never funnels its raw rows through one task: the
+count is a native partial aggregate, and the bitset OR is `bitmap_or_agg`
+over fixed 4096-byte slices, whose partial aggregate runs below the
+Exchange. AQE skew-join handles the join side.
+
+A6 runs without a per-row Python loop: the burn is one NumPy scanline
+kernel per Arrow batch (one interval per capsule and pixel row, exact
+tests only at the interval ends), and the OR is native Spark SQL.
 
 Degenerate input: geometries with an empty coordinate array are dropped
 before the cover, so both cover kernels return the same pairs.
@@ -37,6 +41,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -337,9 +342,9 @@ def rasterize_tile_bitsets(
     Reference: RoadlessRasterizeMapSide.scala:99-134 (buffer -> z13 tiles ->
     TileRasterizer into a 256x256 bitset, snappy-compressed). Here: a pixel
     is set iff its CENTER lies within `buffer_deg` of the polyline — the
-    exact round-capped buffer region, computed by the point-to-polyline
-    distance kernel (no polygon approximation). Output bitset is packed
-    bits (TILE_SIZE*TILE_SIZE/8 bytes); shuffle compression replaces Snappy
+    exact round-capped buffer region (no polygon approximation), burnt by
+    the scanline kernel `burn_batch_bitsets`. Output bitset is packed bits
+    (TILE_SIZE*TILE_SIZE/8 bytes); shuffle compression replaces Snappy
     (E15 — spark.shuffle.compress).
     """
     zoom = int(zoom)
@@ -357,9 +362,14 @@ def rasterize_tile_bitsets(
     return paired.mapInPandas(burn, schema="tile_id bigint, bitset binary")
 
 
-# cap on pixels x segments evaluated per chunk in the burn kernel: bounds
-# peak temp memory at ~8 temps x 4 MB regardless of way length / tile density
-BURN_CHUNK_CELLS = 1 << 19
+# the burn works on BURN_BLOCK_PAIRS pairs at a time and, inside a block, on
+# at most BURN_CHUNK_ROWS (segment, pixel row) intervals at a time: its
+# temporaries stay bounded whatever the batch size, way length or density
+BURN_BLOCK_PAIRS = 16
+BURN_CHUNK_ROWS = 1 << 13
+# columns within this many pixels of an estimated interval end get the
+# exact distance test
+_BURN_WINDOW = 2
 
 
 def burn_batch_bitsets(
@@ -367,96 +377,226 @@ def burn_batch_bitsets(
 ) -> pd.DataFrame:
     """Burn one Arrow batch of (tile_id, xs, ys) pairs into packed bitsets.
 
-    Exact semantics: pixel set iff its center is within `buf` of the
-    polyline. Evaluated candidate-pixels x segment-CHUNKS with the chunk
-    sized so the broadcast product stays under BURN_CHUNK_CELLS cells —
-    round 1's `np.tile` all-pairs product allocated O(pixels x vertices)
-    doubles per pair (gigabytes for a long way on a dense tile, verdict
-    item 4); this form is the same arithmetic with bounded peak memory.
-    """
-    from osm_hadoop_spark.functions.spatial import point_segment_dist_sq
+    Exact semantics: a pixel is set iff its center lies inside the pair's
+    way envelope grown by `buf` and within `buf` of the polyline
+    (`point_segment_dist_sq(...) <= buf**2`, on pixel centres
+    `bxmin + (c + 0.5) * psx`).
+
+    Scanline form: a segment's buffer (a capsule) is convex, so it cuts
+    each pixel row in one interval. Per (segment, row) the interval is
+    estimated analytically (two end discs and the strip between them) and
+    clipped to the tile and to the envelope's columns; only the columns
+    within _BURN_WINDOW pixels of its two ends get the exact distance test,
+    and the first to last accepted column is filled. A per-row difference
+    array unions the intervals, and `packbits` packs each mask. The result
+    equals the per-pixel test: rounding moves an estimated end by far less
+    than a pixel unless a capsule edge is within ~1e-9 of horizontal
+    without being flat, and a flat edge's row is all in or all out."""
     from osm_hadoop_spark.functions.tiles import tile_bounds
 
-    buf2 = buf * buf
-    out_rows = []
-    bxmin, bymin, bxmax, bymax = tile_bounds(
-        pdf["tile_id"].to_numpy(dtype=np.int64), tms=tms_f
+    tile_ids = pdf["tile_id"].to_numpy(dtype=np.int64)
+    n = tile_ids.shape[0]
+    xs, ys, counts = _flat_coords(pdf)
+    xs = xs.astype(np.float64, copy=False)
+    ys = ys.astype(np.float64, copy=False)
+    starts = np.concatenate(([0], np.cumsum(counts)[:-1])).astype(np.int64)
+
+    # way envelope grown by buf; NaN (an empty envelope) for an empty way
+    has = counts > 0
+    env = np.full((4, n), np.nan)
+    if has.any():
+        for k, (f, v) in enumerate(((np.minimum, xs), (np.minimum, ys),
+                                    (np.maximum, xs), (np.maximum, ys))):
+            env[k, has] = f.reduceat(v, starts[has])
+    ex0, ey0, ex1, ey1 = env[0] - buf, env[1] - buf, env[2] + buf, env[3] + buf
+
+    bxmin, bymin, bxmax, bymax = tile_bounds(tile_ids, tms=tms_f)
+    psx = (bxmax - bxmin) / npx
+    psy = (bymax - bymin) / npx
+
+    # segments: a single vertex is one degenerate a == b segment; a way with
+    # a NaN ordinate has a NaN envelope, which no pixel centre is inside
+    nseg = np.where(counts == 1, 1, np.maximum(counts - 1, 0))
+    nseg[np.isnan(env).any(axis=0)] = 0
+    seg_off = np.concatenate(([0], np.cumsum(nseg))).astype(np.int64)
+    seg_pair = np.repeat(np.arange(n), nseg)
+    a = starts[seg_pair] + np.arange(seg_off[-1]) - seg_off[:-1][seg_pair]
+    b = a + (counts[seg_pair] > 1)
+
+    half = np.arange(npx) + 0.5
+    packed = np.empty((n, (npx * npx + 7) // 8), dtype=np.uint8)
+    for p0 in range(0, n, BURN_BLOCK_PAIRS):
+        p1 = min(p0 + BURN_BLOCK_PAIRS, n)
+        blk = slice(p0, p1)
+        cx = bxmin[blk, None] + half * psx[blk, None]
+        cy = bymax[blk, None] - half * psy[blk, None]  # row 0 = north
+        clo, chi = _mask_range((cx >= ex0[blk, None]) & (cx <= ex1[blk, None]), npx)
+        rlo, rhi = _mask_range((cy >= ey0[blk, None]) & (cy <= ey1[blk, None]), npx)
+        diff = np.zeros((p1 - p0) * npx * (npx + 1), dtype=np.int32)
+        segs = np.arange(seg_off[p0], seg_off[p1])
+        if segs.shape[0]:
+            _burn_block(
+                diff, npx, buf, seg_pair[segs] - p0,
+                xs[a[segs]], ys[a[segs]], xs[b[segs]], ys[b[segs]],
+                bxmin[blk], bxmax[blk], bymax[blk], psx[blk], psy[blk],
+                clo, chi, rlo, rhi,
+            )
+        mask = np.cumsum(diff.reshape(p1 - p0, npx, npx + 1), axis=2, dtype=np.int32)
+        packed[blk] = np.packbits(mask[:, :, :npx].reshape(p1 - p0, -1) > 0, axis=1)
+
+    width = packed.shape[1]
+    bitsets = pa.Array.from_buffers(
+        pa.large_binary(), n,
+        [None, pa.py_buffer(np.arange(n + 1, dtype=np.int64) * width), pa.py_buffer(packed)],
     )
-    for i in range(pdf.shape[0]):
-        xs = np.asarray(pdf["xs"].iloc[i], dtype=np.float64)
-        ys = np.asarray(pdf["ys"].iloc[i], dtype=np.float64)
-        psx = (bxmax[i] - bxmin[i]) / npx
-        psy = (bymax[i] - bymin[i]) / npx
-        cx = bxmin[i] + (np.arange(npx) + 0.5) * psx
-        cy = bymax[i] - (np.arange(npx) + 0.5) * psy  # row 0 = north
-        gx, gy = np.meshgrid(cx, cy)
-        # prune: only evaluate pixels near the geometry's envelope
-        ex0, ex1 = xs.min() - buf, xs.max() + buf
-        ey0, ey1 = ys.min() - buf, ys.max() + buf
-        cand = (gx >= ex0) & (gx <= ex1) & (gy >= ey0) & (gy <= ey1)
-        mask = np.zeros((npx, npx), dtype=bool)
-        if cand.any():
-            pcx = gx[cand]
-            pcy = gy[cand]
-            hit = np.zeros(pcx.shape[0], dtype=bool)
-            if xs.shape[0] == 1:
-                d2 = (pcx - xs[0]) ** 2 + (pcy - ys[0]) ** 2
-                hit |= d2 <= buf2
-            else:
-                x1, y1 = xs[:-1], ys[:-1]
-                x2, y2 = xs[1:], ys[1:]
-                chunk = max(1, BURN_CHUNK_CELLS // max(1, pcx.shape[0]))
-                for s0 in range(0, x1.shape[0], chunk):
-                    sl = slice(s0, s0 + chunk)
-                    d2 = point_segment_dist_sq(
-                        pcx[:, None], pcy[:, None],
-                        x1[None, sl], y1[None, sl], x2[None, sl], y2[None, sl],
-                    )
-                    hit |= (d2 <= buf2).any(axis=1)
-                    if hit.all():
-                        break
-            mask[cand] = hit
-        out_rows.append({
-            "tile_id": int(pdf["tile_id"].iloc[i]),
-            "bitset": np.packbits(mask).tobytes(),
-        })
-    return pd.DataFrame(out_rows, columns=["tile_id", "bitset"])
+    return pd.DataFrame({
+        "tile_id": tile_ids,
+        "bitset": bitsets.to_numpy(zero_copy_only=False),
+    })
 
 
-def or_composite_bitsets(
-    bitsets: DataFrame, salted: bool = True, salt_buckets: int = 8
-) -> DataFrame:
+def _mask_range(mask: np.ndarray, npx: int):
+    """First and last True index per row of a row-contiguous mask;
+    (npx, -1) for a row with none."""
+    some = mask.any(axis=1)
+    lo = np.where(some, np.argmax(mask, axis=1), npx)
+    hi = np.where(some, npx - 1 - np.argmax(mask[:, ::-1], axis=1), -1)
+    return lo, hi
+
+
+def _burn_block(diff, npx, buf, pair, ax, ay, bx, by,
+                bxmin, bxmax, bymax, psx, psy, clo, chi, rlo, rhi):
+    """Add one block's (segment, row) intervals to its difference array
+    `diff`, laid out (pair, row, npx + 1 columns)."""
+    from osm_hadoop_spark.functions.spatial import point_segment_dist_sq
+
+    # pixel rows each segment's capsule can reach, inside the envelope rows;
+    # a capsule that misses the tile's columns reaches none
+    yhi = np.maximum(ay, by) + buf
+    ylo = np.minimum(ay, by) - buf
+    r0 = np.floor(np.clip((bymax[pair] - yhi) / psy[pair] - 0.5, -2, npx + 1)).astype(np.int64)
+    r1 = np.ceil(np.clip((bymax[pair] - ylo) / psy[pair] - 0.5, -2, npx + 1)).astype(np.int64)
+    r0 = np.maximum(r0, rlo[pair])
+    r1 = np.minimum(r1, rhi[pair])
+    near = ((np.minimum(ax, bx) - buf <= bxmax[pair] + psx[pair])
+            & (np.maximum(ax, bx) + buf >= bxmin[pair] - psx[pair]))
+    nrow = np.where(near, np.maximum(r1 - r0 + 1, 0), 0)
+    before = np.concatenate(([0], np.cumsum(nrow)[:-1]))
+    chunk = before // BURN_CHUNK_ROWS
+    cuts = np.concatenate(([0], np.flatnonzero(np.diff(chunk)) + 1, [nrow.shape[0]]))
+    win = np.arange(-_BURN_WINDOW, _BURN_WINDOW + 1)
+    clim = (-4 * _BURN_WINDOW, npx + 4 * _BURN_WINDOW)
+    buf2 = buf * buf
+    for s0, s1 in zip(cuts[:-1], cuts[1:]):
+        seg = np.repeat(np.arange(s0, s1), nrow[s0:s1])
+        if not seg.shape[0]:
+            continue
+        row = r0[seg] + np.arange(seg.shape[0]) - (before[seg] - before[s0])
+        p = pair[seg]
+        y = bymax[p] - (row + 0.5) * psy[p]
+        lo, hi = _capsule_row_interval(y, ax[seg], ay[seg], bx[seg], by[seg], buf)
+        ok = lo <= hi
+        seg, row, p, y, lo, hi = seg[ok], row[ok], p[ok], y[ok], lo[ok], hi[ok]
+        c0 = np.ceil(np.clip((lo - bxmin[p]) / psx[p] - 0.5, *clim)).astype(np.int64)
+        c1 = np.floor(np.clip((hi - bxmin[p]) / psx[p] - 0.5, *clim)).astype(np.int64)
+        c0 = np.maximum(c0, clo[p])
+        c1 = np.minimum(c1, chi[p])
+        # farther apart than the windows reach: the clip left no pixel
+        ok = c0 <= c1 + _BURN_WINDOW
+        seg, row, p, y, c0, c1 = seg[ok], row[ok], p[ok], y[ok], c0[ok], c1[ok]
+        cols = np.concatenate((c0[:, None] + win, c1[:, None] + win), axis=1)
+        d2 = point_segment_dist_sq(
+            bxmin[p, None] + (cols + 0.5) * psx[p, None], y[:, None],
+            ax[seg, None], ay[seg, None], bx[seg, None], by[seg, None],
+        )
+        acc = (cols >= clo[p, None]) & (cols <= chi[p, None]) & (d2 <= buf2)
+        hit = acc.any(axis=1)
+        first = np.where(acc, cols, npx).min(axis=1)[hit]
+        last = np.where(acc, cols, -1).max(axis=1)[hit]
+        base = (p[hit] * npx + row[hit]) * (npx + 1)
+        np.add.at(diff, base + first, 1)
+        np.add.at(diff, base + last + 1, -1)
+
+
+def _capsule_row_interval(y, ax, ay, bx, by, r):
+    """x-interval [lo, hi] where the line at height y meets the capsule of
+    radius r around segment ab: the union of its cuts through the two end
+    discs and the strip between them (lo > hi: no cut)."""
+    lo = np.full(y.shape[0], np.inf)
+    hi = np.full(y.shape[0], -np.inf)
+    for px, py in ((ax, ay), (bx, by)):
+        h2 = r * r - (y - py) ** 2
+        h = np.sqrt(np.maximum(h2, 0.0))
+        lo = np.where(h2 >= 0, np.minimum(lo, px - h), lo)
+        hi = np.where(h2 >= 0, np.maximum(hi, px + h), hi)
+    dx, dy, v = bx - ax, by - ay, y - ay
+    l2 = dx * dx + dy * dy
+    rl = r * np.sqrt(l2)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        # along the segment: 0 <= (x - ax) * dx + v * dy <= l2
+        t0 = ax - v * dy / dx
+        t1 = ax + (l2 - v * dy) / dx
+        all_along = (v * dy >= 0) & (v * dy <= l2)
+        # across it: |(x - ax) * dy - v * dx| <= r * |ab|
+        q0 = ax + (v * dx - rl) / dy
+        q1 = ax + (v * dx + rl) / dy
+        all_across = np.abs(v * dx) <= rl
+    inf = np.inf
+    s_lo = np.maximum(
+        np.where(dx != 0, np.minimum(t0, t1), np.where(all_along, -inf, inf)),
+        np.where(dy != 0, np.minimum(q0, q1), np.where(all_across, -inf, inf)),
+    )
+    s_hi = np.minimum(
+        np.where(dx != 0, np.maximum(t0, t1), np.where(all_along, inf, -inf)),
+        np.where(dy != 0, np.maximum(q0, q1), np.where(all_across, inf, -inf)),
+    )
+    strip = (l2 > 0) & (s_lo <= s_hi)
+    return np.where(strip, np.minimum(lo, s_lo), lo), np.where(strip, np.maximum(hi, s_hi), hi)
+
+
+# bitmap_or_agg ORs into a fixed buffer of this many bytes
+_OR_SLICE_BYTES = 4096
+
+
+def or_composite_bitsets(bitsets: DataFrame, salted: bool = True) -> DataFrame:
     """A6: bitwise-OR all way bitmasks per tile
-    (RoadlessRasterizeMapSide.RasterizedTileStack:142-166).
+    (RoadlessRasterizeMapSide.RasterizedTileStack:142-166). All bitsets of
+    one tile must have the same length; any length works.
 
-    OR is commutative/associative but pandas UDAFs get no partial agg from
-    Spark — so `salted=True` runs a two-level OR ((tile, salt) partial, then
-    tile final), bounding any single group's fan-in: the explicit
-    salt-the-hot-key path of the north rule.
+    The default is native Spark SQL: each bitset is cut into 4096-byte
+    slices (the fixed buffer of `bitmap_or_agg`), every (tile, slice) is
+    OR'd by `bitmap_or_agg` and trimmed back to its input length, and the
+    slices are concatenated in order. `bitmap_or_agg` combines map-side
+    below its Exchange, so a dense tile never funnels its raw bitsets
+    through one task. `salted=False` is the independent twin: one
+    `applyInPandas` OR per tile.
     """
-
-    def or_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        arrs = np.stack([np.frombuffer(b, dtype=np.uint8) for b in pdf["bitset"]])
-        return pd.DataFrame({"tile_id": [key[0]], "bitset": [np.bitwise_or.reduce(arrs, axis=0).tobytes()]})
-
     if not salted:
+        def or_group(key, pdf):
+            arrs = np.stack([np.frombuffer(b, dtype=np.uint8) for b in pdf["bitset"]])
+            return pd.DataFrame({"tile_id": [key[0]],
+                                 "bitset": [np.bitwise_or.reduce(arrs, axis=0).tobytes()]})
+
         return bitsets.groupBy("tile_id").applyInPandas(
             or_group, schema="tile_id bigint, bitset binary"
         )
 
-    def or_group2(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        arrs = np.stack([np.frombuffer(b, dtype=np.uint8) for b in pdf["bitset"]])
-        return pd.DataFrame({"tile_id": [key[0]], "_salt": [key[1]],
-                             "bitset": [np.bitwise_or.reduce(arrs, axis=0).tobytes()]})
-
-    partial = (
-        # salt from row CONTENT (not monotonically_increasing_id): stable
-        # across task retries, so speculative re-execution cannot move a row
-        # between salt groups mid-job
-        bitsets.withColumn("_salt", F.pmod(F.hash("tile_id", "bitset"), F.lit(salt_buckets)))
-        .groupBy("tile_id", "_salt")
-        .applyInPandas(or_group2, schema="tile_id bigint, _salt int, bitset binary")
+    n_slices = F.greatest(F.ceil(F.length("bitset") / _OR_SLICE_BYTES), F.lit(1))
+    sliced = bitsets.select(
+        "tile_id", "bitset", F.explode(F.sequence(F.lit(0), n_slices - 1)).alias("_slice")
+    ).select(
+        "tile_id", "_slice",
+        F.substring("bitset", F.col("_slice") * _OR_SLICE_BYTES + 1, F.lit(_OR_SLICE_BYTES))
+        .alias("_part"),
     )
-    return partial.groupBy("tile_id").applyInPandas(
-        or_group, schema="tile_id bigint, bitset binary"
+    slices = sliced.groupBy("tile_id", "_slice").agg(
+        F.bitmap_or_agg("_part").alias("_or"), F.max(F.length("_part")).alias("_len")
+    )
+    # concatenated as hex: array_join joins strings, not binary
+    hexed = slices.select(
+        "tile_id", F.struct("_slice", F.hex(F.substring("_or", F.lit(1), F.col("_len"))).alias("_hex")).alias("_s")
+    )
+    return hexed.groupBy("tile_id").agg(
+        F.unhex(F.array_join(F.sort_array(F.collect_list("_s")).getField("_hex"), ""))
+        .alias("bitset")
     )

@@ -210,6 +210,176 @@ def test_burn_kernel_bounded_memory_long_way_dense_tile():
     assert (got == want).all()
 
 
+def burn_per_pixel_oracle(pdf, tms_f, buf, npx):
+    """The burn's per-pixel definition, one pair at a time: every pixel
+    centre inside the buffered envelope is tested against every segment."""
+    import pandas as pd
+
+    from osm_hadoop_spark.functions.spatial import point_segment_dist_sq
+
+    buf2 = buf * buf
+    out_rows = []
+    bxmin, bymin, bxmax, bymax = tile_bounds(
+        pdf["tile_id"].to_numpy(dtype=np.int64), tms=tms_f
+    )
+    for i in range(pdf.shape[0]):
+        xs = np.asarray(pdf["xs"].iloc[i], dtype=np.float64)
+        ys = np.asarray(pdf["ys"].iloc[i], dtype=np.float64)
+        psx = (bxmax[i] - bxmin[i]) / npx
+        psy = (bymax[i] - bymin[i]) / npx
+        cx = bxmin[i] + (np.arange(npx) + 0.5) * psx
+        cy = bymax[i] - (np.arange(npx) + 0.5) * psy  # row 0 = north
+        gx, gy = np.meshgrid(cx, cy)
+        ex0, ex1 = xs.min() - buf, xs.max() + buf
+        ey0, ey1 = ys.min() - buf, ys.max() + buf
+        cand = (gx >= ex0) & (gx <= ex1) & (gy >= ey0) & (gy <= ey1)
+        mask = np.zeros((npx, npx), dtype=bool)
+        if cand.any():
+            pcx = gx[cand]
+            pcy = gy[cand]
+            hit = np.zeros(pcx.shape[0], dtype=bool)
+            if xs.shape[0] == 1:
+                hit |= (pcx - xs[0]) ** 2 + (pcy - ys[0]) ** 2 <= buf2
+            else:
+                x1, y1 = xs[:-1], ys[:-1]
+                x2, y2 = xs[1:], ys[1:]
+                chunk = max(1, (1 << 19) // max(1, pcx.shape[0]))
+                for s0 in range(0, x1.shape[0], chunk):
+                    sl = slice(s0, s0 + chunk)
+                    d2 = point_segment_dist_sq(
+                        pcx[:, None], pcy[:, None],
+                        x1[None, sl], y1[None, sl], x2[None, sl], y2[None, sl],
+                    )
+                    hit |= (d2 <= buf2).any(axis=1)
+            mask[cand] = hit
+        out_rows.append({
+            "tile_id": int(pdf["tile_id"].iloc[i]),
+            "bitset": np.packbits(mask).tobytes(),
+        })
+    return pd.DataFrame(out_rows, columns=["tile_id", "bitset"])
+
+
+def assert_same_bitsets(got, want):
+    assert list(got.columns) == ["tile_id", "bitset"]
+    assert got["tile_id"].tolist() == want["tile_id"].tolist()
+    bad = [i for i, (g, w) in enumerate(zip(got["bitset"], want["bitset"])) if g != w]
+    assert not bad, f"{len(bad)} of {len(want)} bitsets differ, first at row {bad[0]}"
+
+
+def random_burn_pairs(seed, n, buf, tms, npx=256):
+    """Seeded (tile_id, xs, ys) pairs biased to the burn's boundaries:
+    single-vertex ways, repeated vertices, horizontal and vertical
+    segments, vertices on pixel centres, on pixel edges and `buf` off a
+    pixel centre, and ways that leave the tile."""
+    import pandas as pd
+
+    rng = np.random.default_rng(seed)
+    tile_ids = tile_for_point(rng.uniform(-170, 170, n), rng.uniform(-80, 80, n), 13, tms=tms)
+    bxmin, bymin, bxmax, bymax = tile_bounds(tile_ids, tms=tms)
+    psx = (bxmax - bxmin) / npx
+    psy = (bymax - bymin) / npx
+    xs_l, ys_l = [], []
+    for i in range(n):
+        nv = int(rng.choice([1, 1, 2, 3, 5, 9]))
+        span = rng.choice([1.4, 3.0])
+        c = (rng.uniform(0, span, nv) - (span - 1) / 2) * npx  # pixel units
+        r = (rng.uniform(0, span, nv) - (span - 1) / 2) * npx
+        kind = rng.integers(0, 5, nv)  # 0 free, 1 centre, 2 edge, 3/4 buf off a centre
+        c = np.where(kind == 2, np.floor(c), np.where(kind > 0, np.floor(c) + 0.5, c))
+        r = np.where(kind == 2, np.floor(r), np.where(kind > 0, np.floor(r) + 0.5, r))
+        x = bxmin[i] + c * psx[i]
+        y = bymax[i] - r * psy[i]
+        x = np.where(kind == 3, x + buf, x)
+        y = np.where(kind == 4, y - buf, y)
+        for k in range(1, nv):
+            step = rng.integers(0, 5)  # 0 horizontal, 1 vertical, 2 repeated
+            if step in (0, 2):
+                y[k] = y[k - 1]
+            if step in (1, 2):
+                x[k] = x[k - 1]
+        xs_l.append(x)
+        ys_l.append(y)
+    return pd.DataFrame({"tile_id": tile_ids, "xs": xs_l, "ys": ys_l})
+
+
+def test_burn_matches_per_pixel_oracle_on_workload_pairs(spark):
+    # the buffered z13 (way, tile) pairs of the 96-document corpus: more
+    # pairs than one block, byte-identical, and no more peak memory than
+    # the per-pixel form
+    import tracemalloc
+
+    from osm_hadoop_spark.operators.tile_join import BURN_BLOCK_PAIRS, burn_batch_bitsets
+    from osm_hadoop_spark.operators.way_assembly import build_ways_geom
+    from osm_hadoop_spark.sources.fixtures import gen_documents
+
+    ways = build_ways_geom(gen_documents(spark, 96, seed=42))
+    pairs = assign_tiles(ways, 13, tms=True, buffer_deg=BUFFER_DEG_Z13)
+    pdf = (pairs.join(ways.select("way_id", "xs", "ys"), "way_id")
+           .orderBy("way_id", "tile_id").toPandas()[["tile_id", "xs", "ys"]])
+    assert pdf.shape[0] > 10 * BURN_BLOCK_PAIRS
+
+    peaks = []
+    for kernel in (burn_per_pixel_oracle, burn_batch_bitsets):
+        tracemalloc.start()
+        out = kernel(pdf, True, BUFFER_DEG_Z13, 256)
+        peaks.append(tracemalloc.get_traced_memory()[1])
+        tracemalloc.stop()
+        if kernel is burn_per_pixel_oracle:
+            want = out
+    assert_same_bitsets(out, want)
+    assert peaks[1] <= peaks[0], f"burn peaked at {peaks[1] / 2**20:.1f} MB, oracle {peaks[0] / 2**20:.1f} MB"
+
+
+@pytest.mark.parametrize("buf", [BUFFER_DEG_Z13, 0.001, 0.0])
+def test_burn_matches_per_pixel_oracle_on_boundary_biased_pairs(buf):
+    from osm_hadoop_spark.operators.tile_join import burn_batch_bitsets
+
+    for seed, tms in ((int(buf * 1e6), True), (int(buf * 1e6) + 1, False)):
+        pdf = random_burn_pairs(seed, 150, buf, tms)
+        got = burn_batch_bitsets(pdf, tms, buf, 256)
+        assert_same_bitsets(got, burn_per_pixel_oracle(pdf, tms, buf, 256))
+        if buf:  # the bias must reach the pixels the test is about
+            assert sum(any(b) for b in got["bitset"]) > 50
+
+
+def test_or_composite_matches_numpy_any_length(spark):
+    import pandas as pd
+
+    rng = np.random.default_rng(7)
+    rows = []
+    for length in (16, 4096, 4097, 8192, 12289):
+        for t in range(4):
+            # tile 0 of the 4097-byte bitsets is the hot one: 1200 rows
+            n = 1200 if (length, t) == (4097, 0) else 1 + 3 * t
+            bits = np.zeros((n, length), dtype=np.uint8)
+            pos = rng.integers(0, length * 8, (n, 6))
+            np.bitwise_or.at(bits, (np.arange(n)[:, None], pos // 8),
+                             (1 << (7 - pos % 8)).astype(np.uint8))
+            rows += [(length * 10 + t, b.tobytes()) for b in bits]
+    pdf = pd.DataFrame(rows, columns=["tile_id", "bitset"])
+    df = spark.createDataFrame(pdf, "tile_id bigint, bitset binary")
+    got = {r["tile_id"]: bytes(r["bitset"]) for r in or_composite_bitsets(df).collect()}
+    want = {
+        t: np.bitwise_or.reduce(np.stack([np.frombuffer(b, np.uint8) for b in g["bitset"]])).tobytes()
+        for t, g in pdf.groupby("tile_id")
+    }
+    assert got.keys() == want.keys()
+    assert all(got[t] == want[t] for t in want)
+
+
+def test_or_composite_plan_is_native_and_combines_map_side(spark):
+    df = spark.createDataFrame([(1, b"\x01\x02"), (1, b"\x04\x00")], "tile_id bigint, bitset binary")
+    plan = or_composite_bitsets(df)._jdf.queryExecution().executedPlan().toString()
+    for node in ("MapInPandas", "ArrowEvalPython", "FlatMapGroupsInPandas",
+                 "BatchEvalPython", "PythonUDF"):
+        assert node not in plan, (node, plan)
+    lines = plan.splitlines()
+    partial = next(i for i, ln in enumerate(lines) if "partial_bitmap_or_agg" in ln)
+    exchange = max(i for i, ln in enumerate(lines[:partial]) if "Exchange" in ln)
+    indent = [len(ln) - len(ln.lstrip(" :+-")) for ln in lines]
+    assert indent[partial] > indent[exchange], plan
+
+
 def test_polyline_polygon_intersects_kernel():
     from osm_hadoop_spark.functions.spatial import polyline_polygon_intersects
 

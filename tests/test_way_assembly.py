@@ -227,6 +227,24 @@ def test_with_wkt_jvm_fast_path_and_fallback_mix(spark):
         assert got[i] == exp, (i, got[i], exp)
 
 
+def test_with_wkt_jvm_null_ordinate_takes_the_fallback(spark):
+    """A null ordinate never reaches the WKT: the whole-string fast path
+    would print it as 'null', so the row takes the per-element path,
+    which drops that vertex."""
+    from osm_hadoop_spark.functions.geometry import format_linestring_wkt
+    from osm_hadoop_spark.operators.way_assembly import with_wkt
+
+    import numpy as np
+
+    rows = [(1, [1.5, None, 2.0], [10.0, 3.0, -4.25]),
+            (2, [1.5, 7.0, 2.0], [10.0, None, -4.25]),
+            (3, [1.5, 2.0], [10.0, -4.25])]
+    df = spark.createDataFrame(rows, "way_id long, xs array<double>, ys array<double>")
+    got = {r["way_id"]: r["geometry_wkt"] for r in with_wkt(df, impl="jvm").collect()}
+    want = format_linestring_wkt(np.array([1.5, 2.0]), np.array([10.0, -4.25]))
+    assert got == {1: want, 2: want, 3: want}
+
+
 def test_parse_entities_single_pass_matches_two_pass(db_snapshot_docs):
     """parse_entities (one documents scan) must yield exactly the rows of
     parse_nodes + parse_ways_with_nds; relation spans pass through

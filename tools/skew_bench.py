@@ -21,17 +21,21 @@ a city block" pathology, amplified. Variants, interleaved in one JVM:
              valid while the node working set fits the executors
 
 A6 (bitset OR composite, dense cell): per-(way, tile) bitmasks where one
-z14 tile holds `hot_share` of all rows. or_composite_bitsets is an
-applyInPandas aggregation — Spark gives it NO partial aggregation, so
-salted=True's two-level (tile, salt) pre-combine is the only thing
-standing between the dense cell and a single-task fan-in. Interleaved
-salted vs unsalted.
+z14 tile holds `hot_share` of all rows. Interleaved:
+  pandas  or_composite_bitsets(salted=False): one applyInPandas group per
+          tile, so the dense cell's whole fan-in goes through one Python
+          worker (Spark gives pandas UDAFs no partial aggregation)
+  native  the default: bitmap_or_agg over 4096-byte slices, which
+          combines map-side below the Exchange
 
 Partition balance is computed analytically (rows per shuffle partition at
 the configured partition count, via the same pmod(hash(key), P) Spark
 uses) — max/mean ratio 1.0 = perfectly balanced.
 
 Usage: python tools/skew_bench.py [--quick]   (writes BENCH/SKEW.md)
+       python tools/skew_bench.py --a6 [--quick]
+         (runs only the A6 section and appends its dated rows to
+         BENCH/SKEW.md; the rest of the file stays as it is)
 """
 
 from __future__ import annotations
@@ -47,6 +51,7 @@ sys.path.insert(0, REPO)
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
 QUICK = "--quick" in sys.argv
+A6_ONLY = "--a6" in sys.argv
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 P = CPUS  # shuffle partitions
 REPS = 3
@@ -58,7 +63,7 @@ HOT_SHARE = 0.3  # 30% of all refs hit node 0
 N_BITSETS = 20_000 if QUICK else 200_000
 BITSET_PX = 256  # 256x256 bits = 8 KiB per mask (the reference's A6 size);
 # the hot tile's fan-in is then hot_share*N_BITSETS*8KiB in ONE pandas
-# group unsalted (full scale: ~800 MB through a single worker)
+# group (full scale: ~800 MB through a single worker)
 BS_HOT_SHARE = 0.5  # half of all masks land on one z14 tile
 SALT_R = 16
 
@@ -203,10 +208,8 @@ def a6_variants(bitsets):
                       F.sum(F.length("bitset")).alias("b"))
 
     return {
-        "unsalted": lambda: agg(or_composite_bitsets(bitsets, salted=False)),
-        "salted": lambda: agg(
-            or_composite_bitsets(bitsets, salted=True, salt_buckets=SALT_R)
-        ),
+        "pandas": lambda: agg(or_composite_bitsets(bitsets, salted=False)),
+        "native": lambda: agg(or_composite_bitsets(bitsets)),
     }
 
 
@@ -240,20 +243,24 @@ def main():
     spark = get_spark("skew-bench", master=f"local[{CPUS}]",
                       shuffle_partitions=P)
     refs, nodes, bitsets = gen_inputs(spark)
+    bitsets = bitsets.localCheckpoint(eager=True)
+    bal_bs = balance(bitsets, F.col("tile_id"))
+    log(f"balance bitsets: {bal_bs}")
+    if A6_ONLY:
+        t_a6 = run_interleaved(a6_variants(bitsets), REPS)
+        spark.stop()
+        append_a6_md({"n_bitsets": N_BITSETS, "bs_hot_share": BS_HOT_SHARE,
+                      "cpus": CPUS, "reps": REPS, "times_a6": t_a6})
+        print(json.dumps({"metric": "skew_a6",
+                          "a6_median": {k: med(v) for k, v in t_a6.items()}}))
+        return
     refs = refs.localCheckpoint(eager=True)
     nodes = nodes.localCheckpoint(eager=True)
-    bitsets = bitsets.localCheckpoint(eager=True)
 
     bal_refs = balance(refs, F.col("node_id"))
     r_salted = refs.withColumn("_salt", F.pmod(F.hash("ordinal"), F.lit(SALT_R)))
     bal_refs_salted = balance(r_salted, F.col("node_id"), F.col("_salt"))
-    bal_bs = balance(bitsets, F.col("tile_id"))
-    bs_salted = bitsets.withColumn(
-        "_salt", F.pmod(F.hash("tile_id", "bitset"), F.lit(SALT_R))
-    )
-    bal_bs_salted = balance(bs_salted, F.col("tile_id"), F.col("_salt"))
     log(f"balance refs: {bal_refs} -> salted {bal_refs_salted}")
-    log(f"balance bitsets: {bal_bs} -> salted {bal_bs_salted}")
 
     t_j1 = run_interleaved(j1_variants(spark, refs, nodes), REPS)
     t_a6 = run_interleaved(a6_variants(bitsets), REPS)
@@ -265,7 +272,7 @@ def main():
         "bitset_px": BITSET_PX, "salt_r": SALT_R, "cpus": CPUS, "reps": REPS,
         "balance": {
             "j1_unsalted": bal_refs, "j1_salted": bal_refs_salted,
-            "a6_unsalted": bal_bs, "a6_salted": bal_bs_salted,
+            "a6": bal_bs,
         },
         "times_j1": t_j1, "times_a6": t_a6,
     }
@@ -329,27 +336,46 @@ memory.
 ## A6 — dense z14 cell ({int(d["bs_hot_share"] * 100)}% of {d["n_bitsets"]:,}
 way-tile bitmasks ({d["bitset_px"]}x{d["bitset_px"]} px) land on ONE tile)
 
-applyInPandas aggregations get NO partial aggregation from Spark, so the
-unsalted OR-composite funnels the dense cell's entire fan-in through one
-task; salted=True pre-combines per (tile, salt%{d["salt_r"]}) then merges
-{d["salt_r"]} partials — two bounded levels.
+applyInPandas aggregations get NO partial aggregation from Spark, so
+`pandas` (`salted=False`) funnels the dense cell's entire fan-in through
+one task; `native` (the default) ORs 4096-byte slices with
+`bitmap_or_agg`, which combines map-side: each map task ships one
+partial bitmap per (tile, slice).
 
 | layout | max partition | mean | max/mean |
 |---|---|---|---|
-| unsalted (tile_id) | {b["a6_unsalted"]["max"]:,} | {b["a6_unsalted"]["mean"]:,} | **{b["a6_unsalted"]["ratio"]}x** |
-| salted (tile_id, salt%{d["salt_r"]}) | {b["a6_salted"]["max"]:,} | {b["a6_salted"]["mean"]:,} | **{b["a6_salted"]["ratio"]}x** |
+| tile_id | {b["a6"]["max"]:,} | {b["a6"]["mean"]:,} | **{b["a6"]["ratio"]}x** |
 
 | variant | reps (s) | median (s) |
 |---|---|---|
 {rows_a6}
 
-Correctness invariance (salted == unsalted outputs, any salt count) is
-pinned by tests/test_pipeline_and_skew.py and test_tile_join.py; this
-artifact adds the scale evidence. At 100 TB the same shapes hold: the
+Correctness invariance is pinned by tests: salted == unsalted J1
+outputs by tests/test_pipeline_and_skew.py, native == pandas == NumPy
+bitset ORs by tests/test_tile_join.py; this artifact adds the scale
+evidence. At 100 TB the same shapes hold: the
 hot-key partition grows with data while every other partition stays at
 mean, so the max/mean ratios above UNDERSTATE the production gap.
 """
     with open(os.path.join(REPO, "BENCH", "SKEW.md"), "w") as f:
+        f.write(md)
+
+
+def append_a6_md(d):
+    a6 = {k: med(v) for k, v in d["times_a6"].items()}
+    rows = "\n".join(
+        f"| {k} | {' / '.join(str(t) for t in v)} | {a6[k]:.3f} |"
+        for k, v in d["times_a6"].items()
+    )
+    scale = "--quick scale" if QUICK else "full scale"
+    md = f"""
+### A6 re-run {time.strftime("%Y-%m-%d")} ({scale}: {int(d["bs_hot_share"] * 100)}% of {d["n_bitsets"]:,} masks on one tile, local[{d["cpus"]}], {d["reps"]} reps after warmup)
+
+| variant | reps (s) | median (s) |
+|---|---|---|
+{rows}
+"""
+    with open(os.path.join(REPO, "BENCH", "SKEW.md"), "a") as f:
         f.write(md)
 
 
