@@ -32,8 +32,17 @@ from osm_hadoop_spark.operators.focal import SOBEL
 # ---------------------------------------------------------------------------
 
 
+# parquet schema per (path, mtime): Spark infers a file's schema with one
+# job per read, and a query reads its tables many times while it is built
+_SCHEMAS: dict = {}
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    key = (path, os.path.getmtime(path) if os.path.exists(path) else None)
+    if key not in _SCHEMAS:
+        _SCHEMAS[key] = spark.read.parquet(path).schema
+    return spark.read.schema(_SCHEMAS[key]).parquet(path)
 
 
 def _nodes(spark, sf_dir):
