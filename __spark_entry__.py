@@ -32,17 +32,8 @@ from osm_hadoop_spark.operators.focal import SOBEL
 # ---------------------------------------------------------------------------
 
 
-# parquet schema per (path, mtime): Spark infers a file's schema with one
-# job per read, and a query reads its tables many times while it is built
-_SCHEMAS: dict = {}
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = f"{sf_dir}/{name}.parquet"
-    key = (path, os.path.getmtime(path) if os.path.exists(path) else None)
-    if key not in _SCHEMAS:
-        _SCHEMAS[key] = spark.read.parquet(path).schema
-    return spark.read.schema(_SCHEMAS[key]).parquet(path)
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _nodes(spark, sf_dir):
@@ -7301,7 +7292,7 @@ def _q_bitset_or(spark, sf_dir):
         return F.unhex(F.lpad(F.hex(F.col(c)), 16, "0"))
 
     bits = words.select("tile_id", F.concat(to_bin("w0"), to_bin("w1")).alias("bitset"))
-    composed = or_composite_bitsets(bits, salted=True)
+    composed = or_composite_bitsets(bits)
 
     def from_bin(pos: int):
         return F.conv(F.hex(F.expr(f"substring(bitset, {pos}, 8)")), 16, 10).cast("bigint")

@@ -41,7 +41,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -444,15 +443,7 @@ def burn_batch_bitsets(
         mask = np.cumsum(diff.reshape(p1 - p0, npx, npx + 1), axis=2, dtype=np.int32)
         packed[blk] = np.packbits(mask[:, :, :npx].reshape(p1 - p0, -1) > 0, axis=1)
 
-    width = packed.shape[1]
-    bitsets = pa.Array.from_buffers(
-        pa.large_binary(), n,
-        [None, pa.py_buffer(np.arange(n + 1, dtype=np.int64) * width), pa.py_buffer(packed)],
-    )
-    return pd.DataFrame({
-        "tile_id": tile_ids,
-        "bitset": bitsets.to_numpy(zero_copy_only=False),
-    })
+    return pd.DataFrame({"tile_id": tile_ids, "bitset": [r.tobytes() for r in packed]})
 
 
 def _mask_range(mask: np.ndarray, npx: int):
@@ -569,7 +560,9 @@ def or_composite_bitsets(bitsets: DataFrame, salted: bool = True) -> DataFrame:
     slices are concatenated in order. `bitmap_or_agg` combines map-side
     below its Exchange, so a dense tile never funnels its raw bitsets
     through one task. `salted=False` is the independent twin: one
-    `applyInPandas` OR per tile.
+    `applyInPandas` OR per tile. Neither path salts; the keyword keeps its
+    name only because the benchmark's twin (`perfbench/workloads.py`)
+    passes `salted=`.
     """
     if not salted:
         def or_group(key, pdf):

@@ -33,9 +33,6 @@ the configured partition count, via the same pmod(hash(key), P) Spark
 uses) — max/mean ratio 1.0 = perfectly balanced.
 
 Usage: python tools/skew_bench.py [--quick]   (writes BENCH/SKEW.md)
-       python tools/skew_bench.py --a6 [--quick]
-         (runs only the A6 section and appends its dated rows to
-         BENCH/SKEW.md; the rest of the file stays as it is)
 """
 
 from __future__ import annotations
@@ -51,7 +48,6 @@ sys.path.insert(0, REPO)
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
 QUICK = "--quick" in sys.argv
-A6_ONLY = "--a6" in sys.argv
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 P = CPUS  # shuffle partitions
 REPS = 3
@@ -243,24 +239,16 @@ def main():
     spark = get_spark("skew-bench", master=f"local[{CPUS}]",
                       shuffle_partitions=P)
     refs, nodes, bitsets = gen_inputs(spark)
-    bitsets = bitsets.localCheckpoint(eager=True)
-    bal_bs = balance(bitsets, F.col("tile_id"))
-    log(f"balance bitsets: {bal_bs}")
-    if A6_ONLY:
-        t_a6 = run_interleaved(a6_variants(bitsets), REPS)
-        spark.stop()
-        append_a6_md({"n_bitsets": N_BITSETS, "bs_hot_share": BS_HOT_SHARE,
-                      "cpus": CPUS, "reps": REPS, "times_a6": t_a6})
-        print(json.dumps({"metric": "skew_a6",
-                          "a6_median": {k: med(v) for k, v in t_a6.items()}}))
-        return
     refs = refs.localCheckpoint(eager=True)
     nodes = nodes.localCheckpoint(eager=True)
+    bitsets = bitsets.localCheckpoint(eager=True)
 
     bal_refs = balance(refs, F.col("node_id"))
     r_salted = refs.withColumn("_salt", F.pmod(F.hash("ordinal"), F.lit(SALT_R)))
     bal_refs_salted = balance(r_salted, F.col("node_id"), F.col("_salt"))
+    bal_bs = balance(bitsets, F.col("tile_id"))
     log(f"balance refs: {bal_refs} -> salted {bal_refs_salted}")
+    log(f"balance bitsets: {bal_bs}")
 
     t_j1 = run_interleaved(j1_variants(spark, refs, nodes), REPS)
     t_a6 = run_interleaved(a6_variants(bitsets), REPS)
@@ -358,24 +346,6 @@ hot-key partition grows with data while every other partition stays at
 mean, so the max/mean ratios above UNDERSTATE the production gap.
 """
     with open(os.path.join(REPO, "BENCH", "SKEW.md"), "w") as f:
-        f.write(md)
-
-
-def append_a6_md(d):
-    a6 = {k: med(v) for k, v in d["times_a6"].items()}
-    rows = "\n".join(
-        f"| {k} | {' / '.join(str(t) for t in v)} | {a6[k]:.3f} |"
-        for k, v in d["times_a6"].items()
-    )
-    scale = "--quick scale" if QUICK else "full scale"
-    md = f"""
-### A6 re-run {time.strftime("%Y-%m-%d")} ({scale}: {int(d["bs_hot_share"] * 100)}% of {d["n_bitsets"]:,} masks on one tile, local[{d["cpus"]}], {d["reps"]} reps after warmup)
-
-| variant | reps (s) | median (s) |
-|---|---|---|
-{rows}
-"""
-    with open(os.path.join(REPO, "BENCH", "SKEW.md"), "a") as f:
         f.write(md)
 
 
