@@ -29,12 +29,15 @@ count is a native partial aggregate, and the bitset OR is `bitmap_or_agg`
 over fixed 4096-byte slices, whose partial aggregate runs below the
 Exchange. AQE skew-join handles the join side.
 
-A6 runs without a per-row Python loop: the burn is one NumPy scanline
-kernel per Arrow batch (one interval per capsule and pixel row, exact
-tests only at the interval ends), and the OR is native Spark SQL.
+A6 is one Python stage, as the reference's map-side rasterize is one map
+pass: per Arrow batch of ways, the Arrow J3 kernel's surviving pairs go
+straight into the NumPy scanline burn (one interval per capsule and pixel
+row, exact tests only at the interval ends), with no join back to the
+ways. The OR is native Spark SQL.
 
-Degenerate input: geometries with an empty coordinate array are dropped
-before the cover, so both cover kernels return the same pairs.
+Degenerate input: geometries with an empty coordinate array or a NaN or
+null ordinate are dropped before every J3 kernel (`_valid_geoms`), so both
+cover kernels and the burn see the same ways.
 """
 
 from __future__ import annotations
@@ -100,6 +103,74 @@ def _flat_coords(pdf: pd.DataFrame):
     return xs, ys, counts
 
 
+def _valid_geoms(ways: DataFrame, *cols) -> DataFrame:
+    """The ways in front of every J3 kernel: at least one vertex and no NaN
+    or null ordinate (`array_contains` is true for a NaN element and NULL
+    for a null one; unlike a lambda HOF it stays in whole-stage codegen)."""
+    ok = F.size("xs") > 0
+    for c in ("xs", "ys"):
+        ok = ok & ~F.coalesce(F.array_contains(c, float("nan")), F.lit(True))
+    return ways.select(*cols, "xs", "ys").filter(ok)
+
+
+def _arrow_cover(pdf: pd.DataFrame, zoom: int, tms_f: bool, buf: float, refine: bool = True):
+    """The Arrow J3 kernel on one batch of ways (xs, ys): the envelope cover,
+    its MAX_CELLS_PER_GEOM guard and the exact refine (buffered: polyline-box
+    distance <= buf). Returns (row, tile_id) arrays, one entry per surviving
+    pair, `row` indexing `pdf`."""
+    import sys
+
+    from osm_hadoop_spark.functions.geometry import envelopes_flat
+    from osm_hadoop_spark.functions.spatial import (
+        polyline_box_dist_sq,
+        polyline_box_intersects,
+    )
+    from osm_hadoop_spark.functions.tiles import (
+        _xtile,
+        _ytile,
+        tile_bounds,
+        tiles_for_envelope_flat,
+    )
+
+    xs, ys, counts = _flat_coords(pdf)
+    xmin, ymin, xmax, ymax = envelopes_flat(xs, ys, counts)
+    nx = _xtile(xmax + buf, zoom) - _xtile(xmin - buf, zoom) + 1
+    ny = _ytile(ymin - buf, zoom) - _ytile(ymax + buf, zoom) + 1
+    ok = nx * ny <= MAX_CELLS_PER_GEOM
+    rows = np.flatnonzero(ok)
+    if not ok.all():
+        print(
+            f"assign_tiles: dropped {int((~ok).sum())} geometries "
+            f"exceeding {MAX_CELLS_PER_GEOM} cells at z{zoom}",
+            file=sys.stderr,
+        )
+        keep_coord = np.repeat(ok, counts)
+        xs, ys, counts = xs[keep_coord], ys[keep_coord], counts[ok]
+        xmin, ymin, xmax, ymax = xmin[ok], ymin[ok], xmax[ok], ymax[ok]
+    if not rows.shape[0]:  # the envelope cover below needs >= 1 geometry
+        return rows, np.zeros(0, dtype=np.int64)
+    tiles, env_idx = tiles_for_envelope_flat(
+        xmin - buf, ymin - buf, xmax + buf, ymax + buf, zoom, tms=tms_f
+    )
+    rows = rows[env_idx]
+    if refine and tiles.shape[0]:
+        bxmin, bymin, bxmax, bymax = tile_bounds(tiles, tms=tms_f)
+        # repeat each way's coords once per its candidate tile
+        pair_counts = counts[env_idx]
+        starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
+        take = np.repeat(starts[env_idx], pair_counts) + (
+            np.arange(int(pair_counts.sum()))
+            - np.repeat(np.concatenate(([0], np.cumsum(pair_counts)[:-1])), pair_counts)
+        )
+        pxs, pys = xs[take], ys[take]
+        if buf > 0:
+            keep = polyline_box_dist_sq(pxs, pys, pair_counts, bxmin, bymin, bxmax, bymax) <= buf * buf
+        else:
+            keep = polyline_box_intersects(pxs, pys, pair_counts, bxmin, bymin, bxmax, bymax)
+        tiles, rows = tiles[keep], rows[keep]
+    return rows, tiles
+
+
 def assign_tiles(
     ways: DataFrame,
     zoom: int,
@@ -140,8 +211,7 @@ def assign_tiles(
     buf = float(buffer_deg)
     do_refine = bool(refine)
 
-    # an empty coordinate array has no envelope: drop it before either kernel
-    src = ways.select(F.col("way_id").alias("_id"), "xs", "ys").filter(F.size("xs") > 0)
+    src = _valid_geoms(ways, F.col("way_id").alias("_id"))
 
     if cover_impl not in ("arrow", "jvm"):
         raise ValueError(f"unknown cover_impl {cover_impl!r} (use 'arrow' or 'jvm')")
@@ -261,61 +331,9 @@ def assign_tiles(
         )
 
     def emit(batches):
-        import sys
-
-        from osm_hadoop_spark.functions.geometry import envelopes_flat
-        from osm_hadoop_spark.functions.spatial import (
-            polyline_box_dist_sq,
-            polyline_box_intersects,
-        )
-        from osm_hadoop_spark.functions.tiles import (
-            _xtile,
-            _ytile,
-            tile_bounds,
-            tiles_for_envelope_flat,
-        )
-
         for pdf in batches:
-            if pdf.shape[0] == 0:
-                continue
-            xs, ys, counts = _flat_coords(pdf)
-            xmin, ymin, xmax, ymax = envelopes_flat(xs, ys, counts)
-            nx = _xtile(xmax + buf, zoom) - _xtile(xmin - buf, zoom) + 1
-            ny = _ytile(ymin - buf, zoom) - _ytile(ymax + buf, zoom) + 1
-            ok = nx * ny <= MAX_CELLS_PER_GEOM
-            if not ok.all():
-                print(
-                    f"assign_tiles: dropped {int((~ok).sum())} geometries "
-                    f"exceeding {MAX_CELLS_PER_GEOM} cells at z{zoom}",
-                    file=sys.stderr,
-                )
-                if not ok.any():
-                    continue  # the envelope cover below needs >= 1 geometry
-                keep_coord = np.repeat(ok, counts)
-                xs, ys, counts = xs[keep_coord], ys[keep_coord], counts[ok]
-                pdf = pdf.loc[ok].reset_index(drop=True)
-                xmin, ymin, xmax, ymax = xmin[ok], ymin[ok], xmax[ok], ymax[ok]
-            tiles, env_idx = tiles_for_envelope_flat(
-                xmin - buf, ymin - buf, xmax + buf, ymax + buf, zoom, tms=tms_f
-            )
-            ids = pdf["_id"].to_numpy()[env_idx]
-            if do_refine and tiles.shape[0]:
-                bxmin, bymin, bxmax, bymax = tile_bounds(tiles, tms=tms_f)
-                # repeat each way's coords once per its candidate tile
-                pair_counts = counts[env_idx]
-                starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-                take = np.repeat(starts[env_idx], pair_counts) + (
-                    np.arange(int(pair_counts.sum()))
-                    - np.repeat(np.concatenate(([0], np.cumsum(pair_counts)[:-1])), pair_counts)
-                )
-                pxs, pys = xs[take], ys[take]
-                if buf > 0:
-                    d2 = polyline_box_dist_sq(pxs, pys, pair_counts, bxmin, bymin, bxmax, bymax)
-                    keep = d2 <= buf * buf
-                else:
-                    keep = polyline_box_intersects(pxs, pys, pair_counts, bxmin, bymin, bxmax, bymax)
-                tiles, ids = tiles[keep], ids[keep]
-            yield pd.DataFrame({"_id": ids, "tile_id": tiles})
+            rows, tiles = _arrow_cover(pdf, zoom, tms_f, buf, do_refine)
+            yield pd.DataFrame({"_id": pdf["_id"].to_numpy()[rows], "tile_id": tiles})
 
     out = src.mapInPandas(emit, schema="_id long, tile_id bigint")
     return out.withColumnRenamed("_id", "way_id")
@@ -330,35 +348,44 @@ def tile_counts(assigned: DataFrame) -> DataFrame:
     return assigned.groupBy("tile_id").agg(F.count(F.lit(1)).alias("n_ways"))
 
 
-def rasterize_tile_bitsets(
-    ways: DataFrame,
-    zoom: int,
-    buffer_deg: float,
-    tms: bool = True,
-) -> DataFrame:
+# the fused A6 pass burns and yields at most this many pairs at a time:
+# 1024 packed 256x256 bitsets are 8 MB, whatever the Arrow batch size
+BURN_YIELD_PAIRS = 1024
+
+
+def rasterize_tile_bitsets(ways: DataFrame, zoom: int, buffer_deg: float) -> DataFrame:
     """Per-(way, tile): burn the buffered way into a tile-local bitmask.
 
     Reference: RoadlessRasterizeMapSide.scala:99-134 (buffer -> z13 tiles ->
-    TileRasterizer into a 256x256 bitset, snappy-compressed). Here: a pixel
-    is set iff its CENTER lies within `buffer_deg` of the polyline — the
-    exact round-capped buffer region (no polygon approximation), burnt by
-    the scanline kernel `burn_batch_bitsets`. Output bitset is packed bits
-    (TILE_SIZE*TILE_SIZE/8 bytes); shuffle compression replaces Snappy
-    (E15 — spark.shuffle.compress).
+    TileRasterizer into a 256x256 bitset, snappy-compressed) in one map pass.
+    Here too: one mapInPandas over the `assign_tiles`-guarded ways runs the
+    Arrow J3 kernel per batch and burns its surviving pairs with no join
+    back to `ways`, so J1/J2 are planned once. A pixel is set iff its CENTER
+    lies within `buffer_deg` of the polyline — the exact round-capped buffer
+    region (no polygon approximation). Tile ids are TMS. Output bitset is
+    packed bits (TILE_SIZE*TILE_SIZE/8 bytes); shuffle compression replaces
+    Snappy (E15 — spark.shuffle.compress).
     """
     zoom = int(zoom)
-    tms_f = bool(tms)
     buf = float(buffer_deg)
-
-    assigned = assign_tiles(ways, zoom, tms=tms_f, buffer_deg=buf)
-    paired = assigned.join(ways.select("way_id", "xs", "ys"), "way_id")
 
     def burn(batches):
         for pdf in batches:
-            if pdf.shape[0]:
-                yield burn_batch_bitsets(pdf, tms_f, buf, TILE_SIZE)
+            yield from _burn_ways(pdf, zoom, buf)
 
-    return paired.mapInPandas(burn, schema="tile_id bigint, bitset binary")
+    return _valid_geoms(ways).mapInPandas(burn, schema="tile_id bigint, bitset binary")
+
+
+def _burn_ways(pdf: pd.DataFrame, zoom: int, buf: float):
+    """The fused A6 pass on one batch of ways (xs, ys): the Arrow J3 kernel's
+    surviving pairs, burnt and yielded BURN_YIELD_PAIRS at a time as
+    (tile_id, bitset) frames."""
+    rows, tiles = _arrow_cover(pdf, zoom, True, buf)
+    xs, ys = pdf["xs"].to_numpy(), pdf["ys"].to_numpy()
+    for i in range(0, rows.shape[0], BURN_YIELD_PAIRS):
+        r = rows[i:i + BURN_YIELD_PAIRS]
+        pairs = pd.DataFrame({"tile_id": tiles[i:i + BURN_YIELD_PAIRS], "xs": xs[r], "ys": ys[r]})
+        yield burn_batch_bitsets(pairs, True, buf, TILE_SIZE)
 
 
 # the burn works on BURN_BLOCK_PAIRS pairs at a time and, inside a block, on
@@ -375,6 +402,7 @@ def burn_batch_bitsets(
     pdf: pd.DataFrame, tms_f: bool, buf: float, npx: int
 ) -> pd.DataFrame:
     """Burn one Arrow batch of (tile_id, xs, ys) pairs into packed bitsets.
+    Every way has a vertex and no NaN ordinate (`_valid_geoms`).
 
     Exact semantics: a pixel is set iff its center lies inside the pair's
     way envelope grown by `buf` and within `buf` of the polyline
@@ -400,23 +428,16 @@ def burn_batch_bitsets(
     ys = ys.astype(np.float64, copy=False)
     starts = np.concatenate(([0], np.cumsum(counts)[:-1])).astype(np.int64)
 
-    # way envelope grown by buf; NaN (an empty envelope) for an empty way
-    has = counts > 0
-    env = np.full((4, n), np.nan)
-    if has.any():
-        for k, (f, v) in enumerate(((np.minimum, xs), (np.minimum, ys),
-                                    (np.maximum, xs), (np.maximum, ys))):
-            env[k, has] = f.reduceat(v, starts[has])
-    ex0, ey0, ex1, ey1 = env[0] - buf, env[1] - buf, env[2] + buf, env[3] + buf
+    # way envelope grown by buf
+    ex0, ey0 = np.minimum.reduceat(xs, starts) - buf, np.minimum.reduceat(ys, starts) - buf
+    ex1, ey1 = np.maximum.reduceat(xs, starts) + buf, np.maximum.reduceat(ys, starts) + buf
 
     bxmin, bymin, bxmax, bymax = tile_bounds(tile_ids, tms=tms_f)
     psx = (bxmax - bxmin) / npx
     psy = (bymax - bymin) / npx
 
-    # segments: a single vertex is one degenerate a == b segment; a way with
-    # a NaN ordinate has a NaN envelope, which no pixel centre is inside
-    nseg = np.where(counts == 1, 1, np.maximum(counts - 1, 0))
-    nseg[np.isnan(env).any(axis=0)] = 0
+    # segments: a single vertex is one degenerate a == b segment
+    nseg = np.maximum(counts - 1, 1)
     seg_off = np.concatenate(([0], np.cumsum(nseg))).astype(np.int64)
     seg_pair = np.repeat(np.arange(n), nseg)
     a = starts[seg_pair] + np.arange(seg_off[-1]) - seg_off[:-1][seg_pair]

@@ -96,10 +96,15 @@ def test_refine_prunes_candidates(spark, ways_arrays):
 @pytest.mark.parametrize("buffer_deg", [0.0, BUFFER_DEG_Z13])
 @pytest.mark.parametrize("cover_impl", ["jvm", "arrow"])
 def test_assign_tiles_drops_empty_coordinate_arrays(spark, cover_impl, buffer_deg):
-    """A way with empty xs/ys has no envelope: both kernels drop it and keep
-    the valid way's pairs, instead of raising."""
+    """A way with empty xs/ys has no envelope, and one with a NaN or null
+    ordinate no defined one: both kernels drop them and keep the valid
+    way's pairs, instead of raising or covering part of the way."""
+    nan = float("nan")
     ways = spark.createDataFrame(
-        [(1, [10.0, 10.01], [50.0, 50.01]), (2, [], [])],
+        [(1, [10.0, 10.01], [50.0, 50.01]), (2, [], []),
+         (3, [nan, 10.01], [50.0, 50.01]),              # NaN first
+         (4, [10.0, 10.005, 10.01], [50.0, nan, 50.01]),  # NaN middle
+         (5, [None, 10.01], [50.0, 50.01])],             # null first
         "way_id long, xs array<double>, ys array<double>",
     )
 
@@ -312,7 +317,9 @@ def test_burn_matches_per_pixel_oracle_on_workload_pairs(spark):
     from osm_hadoop_spark.operators.way_assembly import build_ways_geom
     from osm_hadoop_spark.sources.fixtures import gen_documents
 
-    ways = build_ways_geom(gen_documents(spark, 96, seed=42))
+    gen = gen_documents(spark, 96, seed=42)
+    docs = spark.createDataFrame(gen.collect(), gen.schema)  # no Python node of its own
+    ways = build_ways_geom(docs)
     pairs = assign_tiles(ways, 13, tms=True, buffer_deg=BUFFER_DEG_Z13)
     pdf = (pairs.join(ways.select("way_id", "xs", "ys"), "way_id")
            .orderBy("way_id", "tile_id").toPandas()[["tile_id", "xs", "ys"]])
@@ -328,6 +335,49 @@ def test_burn_matches_per_pixel_oracle_on_workload_pairs(spark):
             want = out
     assert_same_bitsets(out, want)
     assert peaks[1] <= peaks[0], f"burn peaked at {peaks[1] / 2**20:.1f} MB, oracle {peaks[0] / 2**20:.1f} MB"
+    # the fused cover+burn pass gives the join-composed pairs' bitsets, in
+    # one Python stage over one J2
+    fused = rasterize_tile_bitsets(ways, 13, BUFFER_DEG_Z13)
+    assert bitset_multiset(fused.collect()) == bitset_multiset(want.itertuples())
+    plan = or_composite_bitsets(fused)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    j2 = [ln for ln in plan.splitlines()
+          if "Aggregate(keys=[way_id" in ln and "functions=[collect_list(" in ln]
+    assert len(j2) == 1, plan
+
+
+def bitset_multiset(rows):
+    from collections import Counter
+
+    return Counter((int(r.tile_id), bytes(r.bitset)) for r in rows)
+
+
+def test_fused_burn_yields_bounded_frames(spark):
+    # one batch of long ways with more (way, tile) pairs than one yield
+    import pandas as pd
+
+    from osm_hadoop_spark.operators.tile_join import (
+        BURN_YIELD_PAIRS,
+        _burn_ways,
+        burn_batch_bitsets,
+    )
+
+    wid = list(range(1, 4))
+    pdf = pd.DataFrame({
+        "way_id": wid,
+        "xs": [np.array([-10.0 + w, 10.0 + w]) for w in wid],
+        "ys": [np.array([20.0 + 0.1 * w, 20.0 + 0.1 * w + 0.03]) for w in wid],
+    })
+    ways = spark.createDataFrame(pdf, "way_id long, xs array<double>, ys array<double>")
+    pairs = (assign_tiles(ways, 13, tms=True, buffer_deg=BUFFER_DEG_Z13)
+             .join(ways, "way_id").toPandas()[["tile_id", "xs", "ys"]])
+    assert pairs.shape[0] > BURN_YIELD_PAIRS
+    want = bitset_multiset(burn_batch_bitsets(pairs, True, BUFFER_DEG_Z13, 256).itertuples())
+
+    frames = list(_burn_ways(pdf, 13, BUFFER_DEG_Z13))
+    assert len(frames) > 1 and all(f.shape[0] <= BURN_YIELD_PAIRS for f in frames)
+    assert bitset_multiset(pd.concat(frames).itertuples()) == want
+    assert bitset_multiset(rasterize_tile_bitsets(ways, 13, BUFFER_DEG_Z13).collect()) == want
 
 
 @pytest.mark.parametrize("buf", [BUFFER_DEG_Z13, 0.001, 0.0])
